@@ -117,25 +117,20 @@ class DocumentParser:
     def parse_table(self, transcripts_df, **kwargs):
         """Distributed: transcripts DataFrame -> node rows (the pipeline's
         transforms ship to executors inside the Arrow UDF)."""
-        import pandas as pd
-
-        from open_parse_spark.core.parse import node_to_record
         from open_parse_spark.spark.pipeline import (
             INPUT_COLS,
             NODE_SCHEMA,
+            _node_rows,
             parse_transcripts,
         )
 
         transforms = self.processing_pipeline.transformations
-        if type(self.processing_pipeline) is BasicIngestionPipeline and getattr(
-            self.processing_pipeline, "_stock_transforms", None
-        ) is not None and len(transforms) == len(
-            self.processing_pipeline._stock_transforms
-        ) and all(
-            a is b
-            for a, b in zip(
-                transforms, self.processing_pipeline._stock_transforms
-            )
+        stock = getattr(self.processing_pipeline, "_stock_transforms", None)
+        if (
+            type(self.processing_pipeline) is BasicIngestionPipeline
+            and stock is not None
+            and len(transforms) == len(stock)
+            and all(a is b for a, b in zip(transforms, stock))
         ):
             # untouched stock pipeline: the tuned zero-shuffle path.  The
             # check is element-wise IDENTITY against the list captured at
@@ -150,67 +145,9 @@ class DocumentParser:
                 "with the stock pipeline"
             )
 
-        def _parse(batches):
-            for pdf in batches:
-                out = {name: [] for name in NODE_SCHEMA.fieldNames()}
-                for conv_id, turn_idx, text, tool in zip(
-                    pdf["conv_id"], pdf["turn_idx"], pdf["text"], pdf["tool"]
-                ):
-                    try:
-                        nodes = run_pipeline(
-                            elements_to_nodes(decode_payload(text, tool)), transforms
-                        )
-                    except Exception as exc:
-                        # same lineage contract as _parse_partition
-                        # (pipeline.py): a malformed payload becomes one
-                        # node_idx=-1 parse_error row, never a failed job
-                        out["conv_id"].append(conv_id)
-                        out["turn_idx"].append(int(turn_idx))
-                        out["node_idx"].append(-1)
-                        out["text"].append(None)
-                        out["tokens"].append(0)
-                        out["variant"].append(["error"])
-                        out["num_pages"].append(0)
-                        out["start_page"].append(0)
-                        out["end_page"].append(0)
-                        out["bbox"].append([])
-                        out["elements"].append([])
-                        out["parse_error"].append(
-                            f"{type(exc).__name__}: {exc}"[:500]
-                        )
-                        continue
-                    for i, node in enumerate(nodes):
-                        rec = node_to_record(node, i)
-                        out["conv_id"].append(conv_id)
-                        out["turn_idx"].append(int(turn_idx))
-                        out["node_idx"].append(i)
-                        out["text"].append(rec["text"])
-                        out["tokens"].append(rec["tokens"])
-                        out["variant"].append(rec["variant"])
-                        out["num_pages"].append(rec["num_pages"])
-                        out["start_page"].append(rec["start_page"])
-                        out["end_page"].append(rec["end_page"])
-                        out["bbox"].append(
-                            [tuple(b.values()) for b in rec["bbox"]]
-                        )
-                        out["elements"].append(
-                            [
-                                (
-                                    e["variant"],
-                                    e["text"],
-                                    tuple(e["bbox"].values()),
-                                    e["image_mimetype"],
-                                )
-                                for e in rec["elements"]
-                            ]
-                        )
-                        out["parse_error"].append(None)
-                if out["conv_id"]:
-                    # zero-node batch: skip the yield (pandas-2 empty-column
-                    # float64 trap vs the list-typed schema columns — see
-                    # spark/pipeline.py:_parse_partition)
-                    yield pd.DataFrame(out)
-
+        # the same row encoder as parse_transcripts, with this pipeline's
+        # transforms: a malformed payload becomes one node_idx=-1
+        # parse_error row, never a failed job
         return transcripts_df.select(*INPUT_COLS).mapInPandas(
-            _parse, schema=NODE_SCHEMA
+            _node_rows(transforms=transforms), schema=NODE_SCHEMA
         )

@@ -602,39 +602,15 @@ FROM base LEFT JOIN hits_ivf USING (query_id)
 def q_parse_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemanticIngestionPipeline variant (P11, reference ingest.py:95-136)
     with the deterministic hashing-embedding client."""
-    from open_parse_spark.core.parse import node_to_record
-    from open_parse_spark.core.payload import decode_payload, elements_to_nodes
     from open_parse_spark.core.semantic import semantic_pipeline_transforms
-    from open_parse_spark.core.transforms import run_pipeline
-    from open_parse_spark.spark.pipeline import INPUT_COLS
-
-    import pandas as pd
+    from open_parse_spark.spark.pipeline import INPUT_COLS, _node_rows
 
     transcripts = documents_as_transcripts(_tbl(spark, sf_dir, "documents"))
-
-    def parse_sem(batches):
-        # min_tokens is a constructor param in the reference too
-        # (ingest.py:100-106); 16 keeps small synthetic docs visible
-        transforms = semantic_pipeline_transforms(min_tokens=16)
-        for pdf in batches:
-            rows = {k: [] for k in ("conv_id", "turn_idx", "node_idx", "text", "tokens")}
-            for conv_id, turn_idx, text, tool in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["text"], pdf["tool"]
-            ):
-                nodes = run_pipeline(
-                    elements_to_nodes(decode_payload(text, tool)), transforms
-                )
-                for i, node in enumerate(nodes):
-                    rec = node_to_record(node, i)
-                    rows["conv_id"].append(conv_id)
-                    rows["turn_idx"].append(int(turn_idx))
-                    rows["node_idx"].append(i)
-                    rows["text"].append(rec["text"])
-                    rows["tokens"].append(rec["tokens"])
-            yield pd.DataFrame(rows)
-
+    # min_tokens is a constructor param in the reference too
+    # (ingest.py:100-106); 16 keeps small synthetic docs visible
+    transforms = semantic_pipeline_transforms(min_tokens=16)
     return transcripts.select(*INPUT_COLS).mapInPandas(
-        parse_sem,
+        _node_rows(("conv_id", "turn_idx", "node_idx", "text", "tokens"), transforms),
         "conv_id string, turn_idx int, node_idx int, text string, tokens long",
     )
 

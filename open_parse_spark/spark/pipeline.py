@@ -29,6 +29,7 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+from operator import attrgetter
 from typing import Iterator, List, Optional, Tuple
 
 import pandas as pd
@@ -85,101 +86,91 @@ NODE_SCHEMA = StructType(
 INPUT_COLS = ["conv_id", "turn_idx", "text", "tool"]
 
 
-def _parse_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: one Arrow batch of turns -> node rows.
+# the identity columns every node row carries; they come from the turn, the
+# rest of NODE_SCHEMA from the parsed Node
+_REQUIRED_OUTPUT = ("conv_id", "turn_idx", "node_idx")
 
-    Imports inside the function body so the closure ships cleanly to Python
-    workers; the tokenizer cache in ``core.tokens`` is process-global per
-    worker (initialized once, reused across batches).
+
+_bbox_tuple = attrgetter("page", "page_height", "page_width", "x0", "y0", "x1", "y1")
+
+
+def _element_tuples(n) -> list:
+    return [
+        (e.variant, e.text, _bbox_tuple(e.bbox), getattr(e, "image_mimetype", None))
+        for e in n.elements
+    ]
+
+
+# per-column (node accessor, error-row value).  Rows are built straight off
+# the Node objects: node_to_record's dict round-trip (nested dicts, then
+# Arrow tuples) was ~11% of the parse body.  The values equal
+# node_to_record's, which the oracle-equality tests pin.  An error row's
+# parse_error is the exception message, filled in by the body.
+_NODE_COLUMNS = {
+    "text": (attrgetter("text"), None),
+    "tokens": (attrgetter("tokens"), 0),
+    "variant": (lambda n: sorted(n.variant), ["error"]),
+    "num_pages": (attrgetter("num_pages"), 0),
+    "start_page": (attrgetter("start_page"), 0),
+    "end_page": (attrgetter("end_page"), 0),
+    "bbox": (lambda n: [_bbox_tuple(b) for b in n.bbox], []),
+    "elements": (_element_tuples, []),
+    "parse_error": (lambda n: None, None),
+}
+
+
+def _node_rows(columns=None, transforms=None):
+    """mapInPandas body factory: one Arrow batch of turns -> node rows.
+
+    ``columns`` is any subset of NODE_SCHEMA that includes
+    ``_REQUIRED_OUTPUT`` (default: all of it); projection pruning cannot reach
+    inside a Python UDF, so a narrow query never builds the columns it drops.
+    ``transforms`` is passed to ``parse_turn`` (default: the stock pipeline).
+    A turn whose parse raises becomes one ``node_idx = -1`` row carrying the
+    exception in ``parse_error`` — lineage: never lose a turn silently.
     """
-    from open_parse_spark.core.parse import parse_turn
+    names = tuple(columns or NODE_SCHEMA.fieldNames())
+    extra = [(c, *_NODE_COLUMNS[c]) for c in names if c not in _REQUIRED_OUTPUT]
 
-    for pdf in batches:
-        out = {name: [] for name in NODE_SCHEMA.fieldNames()}
-        # bind the column lists once: the per-node dict lookups and the
-        # node_to_record dict round-trip (build nested dicts, then convert
-        # them to Arrow tuples) were ~11% of the partition body — rows are
-        # now built straight off the Node objects with the same accessors,
-        # so values are byte-identical (pinned by the oracle-equality test)
-        o_conv, o_turn, o_nidx = out["conv_id"], out["turn_idx"], out["node_idx"]
-        o_text, o_tok, o_var = out["text"], out["tokens"], out["variant"]
-        o_np, o_sp, o_ep = out["num_pages"], out["start_page"], out["end_page"]
-        o_bbox, o_elem, o_err = out["bbox"], out["elements"], out["parse_error"]
-        for conv_id, turn_idx, text, tool in zip(
-            pdf["conv_id"].values,
-            pdf["turn_idx"].values,
-            pdf["text"].values,
-            pdf["tool"].values,
-        ):
-            try:
-                nodes = parse_turn(text, tool)
-            except Exception as exc:  # lineage: never lose a turn silently
-                o_conv.append(conv_id)
-                o_turn.append(int(turn_idx))
-                o_nidx.append(-1)
-                o_text.append(None)
-                o_tok.append(0)
-                o_var.append(["error"])
-                o_np.append(0)
-                o_sp.append(0)
-                o_ep.append(0)
-                o_bbox.append([])
-                o_elem.append([])
-                o_err.append(f"{type(exc).__name__}: {exc}"[:500])
-                continue
-            turn_idx = int(turn_idx)
-            for i, n in enumerate(nodes):
-                o_conv.append(conv_id)
-                o_turn.append(turn_idx)
-                o_nidx.append(i)
-                o_text.append(n.text)
-                o_tok.append(n.tokens)
-                o_var.append(sorted(n.variant))
-                o_np.append(n.num_pages)
-                o_sp.append(n.start_page)
-                o_ep.append(n.end_page)
-                o_bbox.append(
-                    [
-                        (
-                            b.page,
-                            b.page_height,
-                            b.page_width,
-                            b.x0,
-                            b.y0,
-                            b.x1,
-                            b.y1,
-                        )
-                        for b in n.bbox
-                    ]
-                )
-                o_elem.append(
-                    [
-                        (
-                            e.variant,
-                            e.text,
-                            (
-                                e.bbox.page,
-                                e.bbox.page_height,
-                                e.bbox.page_width,
-                                e.bbox.x0,
-                                e.bbox.y0,
-                                e.bbox.x1,
-                                e.bbox.y1,
-                            ),
-                            getattr(e, "image_mimetype", None),
-                        )
-                        for e in n.elements
-                    ]
-                )
-                o_err.append(None)
-        if o_conv:
-            yield pd.DataFrame(out)
-        # else: every turn in this batch parsed to zero nodes — yield
-        # NOTHING.  pandas 2.x types an all-empty column float64, and
-        # Arrow refuses float64 -> list<string> (variant/bbox/elements),
-        # so an empty yield kills the whole job on exactly the batches a
-        # hostile corpus produces (r5 latent-bug find, pinned by
-        # tests/test_spark_pipeline.py::test_all_empty_turn_batches).
+    def node_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # imported on the worker; the tokenizer cache in core.tokens is
+        # process-global per worker (initialized once, reused across batches)
+        from open_parse_spark.core.parse import parse_turn
+
+        for pdf in batches:
+            out = {c: [] for c in names}
+            o_conv, o_turn, o_nidx = (out[c].append for c in _REQUIRED_OUTPUT)
+            sinks = [(out[c].append, get, default) for c, get, default in extra]
+            turns = zip(*(pdf[c].values for c in INPUT_COLS))
+            for conv_id, turn_idx, text, tool in turns:
+                turn_idx = int(turn_idx)
+                try:
+                    nodes = parse_turn(text, tool, transforms)
+                except Exception as exc:
+                    o_conv(conv_id)
+                    o_turn(turn_idx)
+                    o_nidx(-1)
+                    for append, _get, default in sinks:
+                        append(default)
+                    if "parse_error" in out:
+                        out["parse_error"][-1] = f"{type(exc).__name__}: {exc}"[:500]
+                    continue
+                for i, node in enumerate(nodes):
+                    o_conv(conv_id)
+                    o_turn(turn_idx)
+                    o_nidx(i)
+                    for append, get, _default in sinks:
+                        append(get(node))
+            if out["conv_id"]:
+                yield pd.DataFrame(out)
+            # else: every turn in this batch parsed to zero nodes — yield
+            # NOTHING.  pandas 2.x types an all-empty column float64, and
+            # Arrow refuses float64 -> list<string> (variant/bbox/elements),
+            # so an empty yield kills the whole job on exactly the batches
+            # a hostile corpus produces (pinned by
+            # tests/test_spark_pipeline.py::test_all_empty_turn_batches).
+
+    return node_rows
 
 
 # spark.sql.files.maxPartitionBytes values from before the first auto-mode
@@ -200,8 +191,8 @@ def restore_split_conf(spark) -> None:
     Auto skew mode lowers the session conf so the (lazy) parse job gets
     enough scan splits; the lowered value must survive until the job's
     terminal action runs, so the parse itself cannot restore it.  Call this
-    after the action completes (run_resumable and the CLI do) so unrelated
-    later queries in the same session don't inherit tiny splits."""
+    after the action completes (run_resumable does) so unrelated later
+    queries in the same session don't inherit tiny splits."""
     prior = _PRIOR_SPLIT_CONF.pop(_session_key(spark), _MISSING)
     if prior is _MISSING:
         return
@@ -212,69 +203,6 @@ def restore_split_conf(spark) -> None:
 
 
 _MISSING = object()
-
-
-# narrow-output support: projection pruning cannot reach INSIDE a Python
-# UDF, so a query that selects 5 scalar columns would still pay for building
-# + Arrow-shipping the nested bbox/elements columns.  parse_transcripts
-# accepts output_columns and the UDF then never constructs the heavy fields.
-_REQUIRED_OUTPUT = ("conv_id", "turn_idx", "node_idx")
-
-# per-column (value-from-node, error-row-default) extractors; node accessors
-# pull straight from Node, skipping node_to_record's nested dict building
-_NODE_GETTERS = {
-    "text": (lambda n: n.text, None),
-    "tokens": (lambda n: n.tokens, 0),
-    "variant": (lambda n: sorted(n.variant), ["error"]),
-    "num_pages": (lambda n: n.num_pages, 0),
-    "start_page": (lambda n: n.start_page, 0),
-    "end_page": (lambda n: n.end_page, 0),
-    "parse_error": (lambda n: None, None),
-}
-
-
-def _make_narrow_partition(columns):
-    """mapInPandas body producing only ``columns`` (all scalar/simple)."""
-    extra = [c for c in columns if c not in _REQUIRED_OUTPUT]
-    getters = [(c, *_NODE_GETTERS[c]) for c in extra]
-
-    def _narrow_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from open_parse_spark.core.parse import parse_turn
-
-        for pdf in batches:
-            out = {c: [] for c in columns}
-            for conv_id, turn_idx, text, tool in zip(
-                pdf["conv_id"].values,
-                pdf["turn_idx"].values,
-                pdf["text"].values,
-                pdf["tool"].values,
-            ):
-                try:
-                    nodes = parse_turn(text, tool)
-                except Exception as exc:  # same lineage contract as full path
-                    out["conv_id"].append(conv_id)
-                    out["turn_idx"].append(int(turn_idx))
-                    out["node_idx"].append(-1)
-                    for col, _get, default in getters:
-                        out[col].append(
-                            f"{type(exc).__name__}: {exc}"[:500]
-                            if col == "parse_error"
-                            else default
-                        )
-                    continue
-                for i, node in enumerate(nodes):
-                    out["conv_id"].append(conv_id)
-                    out["turn_idx"].append(int(turn_idx))
-                    out["node_idx"].append(i)
-                    for col, get, _default in getters:
-                        out[col].append(get(node))
-            if out["conv_id"]:
-                # zero-node batch: see _parse_partition — an empty yield
-                # would hit the pandas-2 float64 empty-column trap when the
-                # narrow schema includes a list column (variant)
-                yield pd.DataFrame(out)
-
-    return _narrow_partition
 
 
 def _input_file_bytes(df: DataFrame) -> int:
@@ -390,7 +318,17 @@ def parse_transcripts(
       are inherently size-balanced even under conv_id clustering.  Falls
       back to the salted shuffle only when the source is not file-split
       (e.g. an in-memory DataFrame) and remains under-split.
+
+    ``output_columns``: any subset of NODE_SCHEMA that includes conv_id,
+    turn_idx and node_idx (default: all of it); the UDF builds only these.
     """
+    cols = list(NODE_SCHEMA.fieldNames() if output_columns is None else output_columns)
+    missing = [c for c in _REQUIRED_OUTPUT if c not in cols]
+    if missing:
+        raise ValueError(f"output_columns must include {missing}")
+    unknown = [c for c in cols if c not in NODE_SCHEMA.fieldNames()]
+    if unknown:
+        raise ValueError(f"unknown output columns {unknown}")
     spark = df.sparkSession
     pruned = df.select(*INPUT_COLS)
     parallelism = spark.sparkContext.defaultParallelism
@@ -428,8 +366,9 @@ def parse_transcripts(
                 # time, so it cannot be scoped to this call — Spark reads it
                 # lazily when the action runs); only lower it when the input
                 # is big enough that re-splitting matters, record the prior
-                # value, and let terminal operations (run_resumable, CLI,
-                # bench) call restore_split_conf() once their actions finish
+                # value, and let a terminal operation call
+                # restore_split_conf() once its actions finish (run_resumable
+                # does)
                 if total_bytes >= 8 * (1 << 20):
                     key = _session_key(spark)
                     if key not in _PRIOR_SPLIT_CONF:
@@ -439,7 +378,9 @@ def parse_transcripts(
                     spark.conf.set(
                         "spark.sql.files.maxPartitionBytes", str(split_bytes)
                     )
-                    n_splits = pruned.rdd.getNumPartitions()
+                    # re-probe a FRESH projection: DataFrame.rdd is cached,
+                    # so pruned.rdd would still report the pre-lowering count
+                    n_splits = df.select(*INPUT_COLS).rdd.getNumPartitions()
         # a big file-backed source is already size-balanced by byte-ranged
         # splits.  But splits only parallelize down to ROW GROUPS: a small
         # source (one tiny file, or files written as single row groups)
@@ -475,25 +416,9 @@ def parse_transcripts(
                 "_salt", F.xxhash64(F.col("conv_id"), F.col("turn_idx"))
             )
             pruned = salted.repartition(planned, "_salt").drop("_salt")
-    if output_columns is None:
-        nodes = pruned.mapInPandas(_parse_partition, schema=NODE_SCHEMA)
-    else:
-        cols = list(output_columns)
-        missing = [c for c in _REQUIRED_OUTPUT if c not in cols]
-        if missing:
-            raise ValueError(f"output_columns must include {missing}")
-        bad = [
-            c
-            for c in cols
-            if c not in _REQUIRED_OUTPUT and c not in _NODE_GETTERS
-        ]
-        if bad:
-            raise ValueError(
-                f"unsupported narrow output columns {bad} — nested columns "
-                "(bbox, elements) require the full schema (output_columns=None)"
-            )
-        schema = StructType([NODE_SCHEMA[c] for c in cols])
-        nodes = pruned.mapInPandas(_make_narrow_partition(tuple(cols)), schema=schema)
+    nodes = pruned.mapInPandas(
+        _node_rows(cols), schema=StructType([NODE_SCHEMA[c] for c in cols])
+    )
     if drop_errors:
         nodes = nodes.where(F.col("node_idx") >= 0)
     return nodes

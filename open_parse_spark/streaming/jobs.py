@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from open_parse_spark.spark.pipeline import NODE_SCHEMA, _parse_partition
+from open_parse_spark.spark.pipeline import NODE_SCHEMA, _node_rows
 
 TRANSCRIPT_DDL = (
     "conv_id string, turn_idx int, role string, text string, tool string, "
@@ -38,7 +38,7 @@ def streaming_parse(
         .parquet(input_dir)
     )
     pruned = stream.select("conv_id", "turn_idx", "text", "tool")
-    return pruned.mapInPandas(_parse_partition, schema=NODE_SCHEMA)
+    return pruned.mapInPandas(_node_rows(), schema=NODE_SCHEMA)
 
 
 def streaming_events_hourly(

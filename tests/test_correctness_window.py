@@ -3,11 +3,7 @@
 These guards keep the window a decision: a new registry entry that should be
 snapshot-checked must be added to the window explicitly."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
-from open_parse_spark.plans.queries import (  # noqa: E402
+from open_parse_spark.plans.queries import (
     CORRECTNESS_WINDOW,
     REGISTRY,
     oracle_sql,

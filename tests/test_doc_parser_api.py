@@ -129,3 +129,30 @@ def test_parse_table_custom_pipeline_emits_error_rows(spark):
     assert "ValueError" in errs.iloc[0]["parse_error"]
     # the healthy turn still parsed
     assert (out[out.turn_idx == 1].node_idx >= 0).all()
+
+
+def test_parse_table_custom_branch_equals_parse_transcripts(spark):
+    """A pipeline whose transforms equal the stock list but are not the same
+    objects takes parse_table's custom branch; its full node relation,
+    nested bbox/elements included, equals parse_transcripts'."""
+    import pandas as pd
+
+    from open_parse_spark.core.transforms import basic_pipeline_transforms
+    from open_parse_spark.data.synth import gen_transcripts
+    from open_parse_spark.spark.pipeline import parse_transcripts
+
+    pipeline = BasicIngestionPipeline()
+    pipeline.transformations = basic_pipeline_transforms()
+    # some stock transforms are plain functions (shared), the configured
+    # ones are fresh closures, so parse_table takes the custom branch
+    assert not all(
+        a is b for a, b in zip(pipeline.transformations, pipeline._stock_transforms)
+    )
+    df = spark.createDataFrame(gen_transcripts(n_convs=12, avg_turns=5, seed=5))
+    custom = DocumentParser(pipeline).parse_table(df)
+    stock = parse_transcripts(df, repartition_for_skew=False)
+    assert custom.schema == stock.schema
+    key = ["conv_id", "turn_idx", "node_idx"]
+    got = custom.orderBy(*key).toPandas()
+    assert len(got) > 0
+    pd.testing.assert_frame_equal(got, stock.orderBy(*key).toPandas())

@@ -18,11 +18,6 @@ def _bench_transcripts() -> str:
     # BENCH/bench_transcripts is gitignored bench-generated data; regenerate
     # it (cached by bench.py's config stamp) so the suite is self-contained
     # after a clean checkout.
-    import sys as _sys
-
-    repo = "/root/repo"
-    if repo not in _sys.path:
-        _sys.path.insert(0, repo)
     import bench
 
     return bench._ensure_bench_transcripts()
@@ -35,6 +30,52 @@ def test_parse_is_zero_shuffle(spark):
     plan = _plan(parse_transcripts(t, repartition_for_skew=False))
     assert "Exchange" not in plan, plan
     assert "CartesianProduct" not in plan
+
+
+def test_single_file_auto_resplit_has_no_exchange(spark, tmp_path):
+    """One ~11 MB file with 256-row row groups plans 3 default splits on
+    local[4]; auto mode lowers the split conf and must then see the finer
+    split count, so the parse stays a pure map (no salted shuffle)."""
+    import os
+
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from open_parse_spark.data.synth import gen_transcripts
+    from open_parse_spark.spark.pipeline import parse_transcripts, restore_split_conf
+
+    base = gen_transcripts(n_convs=400, avg_turns=6, seed=3)
+    pdf = pd.concat(
+        [base.assign(conv_id=base.conv_id + f"-{k}") for k in range(9)],
+        ignore_index=True,
+    )
+    path = str(tmp_path / "transcripts.parquet")
+    pq.write_table(
+        pa.Table.from_pandas(pdf, preserve_index=False),
+        path,
+        row_group_size=256,
+        coerce_timestamps="us",
+        allow_truncated_timestamps=True,
+    )
+    size = os.path.getsize(path)
+    assert 8 << 20 <= size < 16 << 20, size
+    conf = "spark.sql.files.maxPartitionBytes"
+    prior = spark.conf.get(conf, None)
+    spark.conf.unset(conf)
+    try:
+        parallelism = spark.sparkContext.defaultParallelism
+        t = spark.read.parquet(path)
+        assert t.rdd.getNumPartitions() < parallelism  # under-split as read
+        plan = _plan(parse_transcripts(t))
+        assert int(spark.conf.get(conf)) == size // (3 * parallelism)
+        assert "Exchange" not in plan, plan
+    finally:
+        restore_split_conf(spark)
+        if prior is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, prior)
 
 
 def test_decontaminate_broadcasts_benchmark(spark):

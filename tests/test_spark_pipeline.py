@@ -148,8 +148,8 @@ def test_resume_exactly_once(spark, transcripts_df, tmp_path):
 
 def test_split_conf_restored_after_parse(spark):
     """Auto skew mode records the prior maxPartitionBytes before lowering it;
-    restore_split_conf puts the session back exactly (run_resumable and the
-    CLI call it after their terminal actions)."""
+    restore_split_conf puts the session back exactly (run_resumable calls it
+    after its terminal actions)."""
     from open_parse_spark.spark.pipeline import (
         _PRIOR_SPLIT_CONF,
         _session_key,
@@ -162,7 +162,7 @@ def test_split_conf_restored_after_parse(spark):
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(1 << 20))
     restore_split_conf(spark)
     assert spark.conf.get("spark.sql.files.maxPartitionBytes") == prior
-    assert id(spark) not in _PRIOR_SPLIT_CONF
+    assert _session_key(spark) not in _PRIOR_SPLIT_CONF
     # idempotent no-op when nothing was recorded
     restore_split_conf(spark)
     assert spark.conf.get("spark.sql.files.maxPartitionBytes") == prior
@@ -177,22 +177,29 @@ def test_small_input_auto_mode_leaves_conf_untouched(spark, transcripts_df):
 
 def test_narrow_output_columns_equal_full(spark, transcripts_df):
     """output_columns produces exactly the full pipeline's values for the
-    requested columns (same parse, skipped construction of the rest)."""
-    cols = ["conv_id", "turn_idx", "node_idx", "text", "tokens"]
-    full = (
-        parse_transcripts(transcripts_df, repartition_for_skew=False)
-        .select(*cols)
-        .orderBy(*cols)
-        .toPandas()
-    )
-    narrow = (
-        parse_transcripts(
+    requested columns (same parse, skipped construction of the rest) — for
+    scalar, list and nested columns alike."""
+    from open_parse_spark.spark.pipeline import NODE_SCHEMA
+
+    key = ["conv_id", "turn_idx", "node_idx"]
+    full = parse_transcripts(transcripts_df, repartition_for_skew=False)
+    for extra in (
+        ["text", "tokens"],
+        ["variant"],
+        ["bbox"],
+        ["elements"],
+        ["parse_error"],
+        [c for c in NODE_SCHEMA.fieldNames() if c not in key],
+    ):
+        cols = key + extra
+        narrow = parse_transcripts(
             transcripts_df, repartition_for_skew=False, output_columns=cols
         )
-        .orderBy(*cols)
-        .toPandas()
-    )
-    pd.testing.assert_frame_equal(full, narrow)
+        assert narrow.schema == full.select(*cols).schema, extra
+        pd.testing.assert_frame_equal(
+            full.select(*cols).orderBy(*key).toPandas(),
+            narrow.orderBy(*key).toPandas(),
+        )
 
 
 def test_narrow_output_columns_validation(spark, transcripts_df):
@@ -200,10 +207,10 @@ def test_narrow_output_columns_validation(spark, transcripts_df):
 
     with _pytest.raises(ValueError):
         parse_transcripts(transcripts_df, output_columns=["conv_id", "text"])
-    with _pytest.raises(ValueError):
+    with _pytest.raises(ValueError, match="unknown"):
         parse_transcripts(
             transcripts_df,
-            output_columns=["conv_id", "turn_idx", "node_idx", "bbox"],
+            output_columns=["conv_id", "turn_idx", "node_idx", "no_such_col"],
         )
 
 
