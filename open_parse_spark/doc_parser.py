@@ -132,7 +132,7 @@ class DocumentParser:
             and len(transforms) == len(stock)
             and all(a is b for a, b in zip(transforms, stock))
         ):
-            # untouched stock pipeline: the tuned zero-shuffle path.  The
+            # untouched stock pipeline: the parse_transcripts path.  The
             # check is element-wise IDENTITY against the list captured at
             # construction — a type+length check alone would silently route
             # an in-place-replaced transform to the stock path (review)

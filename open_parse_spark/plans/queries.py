@@ -68,7 +68,6 @@ def q_parse_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     transcripts = documents_as_transcripts(_tbl(spark, sf_dir, "documents"))
     nodes = parse_transcripts(
         transcripts,
-        repartition_for_skew="auto",
         output_columns=["conv_id", "turn_idx", "node_idx", "text", "tokens"],
     )
     return nodes.orderBy("conv_id", "turn_idx", "node_idx")
@@ -80,9 +79,7 @@ def q_parse_bbox_debug(spark: SparkSession, sf_dir: str) -> DataFrame:
     from open_parse_spark.plans.exports import nodes_bbox_debug
 
     transcripts = documents_as_transcripts(_tbl(spark, sf_dir, "documents"))
-    # bbox is a nested column: the narrow-output fast path can't carry it,
-    # so this query takes the full node schema (debug sink, not a hot path)
-    nodes = parse_transcripts(transcripts, repartition_for_skew="auto")
+    nodes = parse_transcripts(transcripts)
     return nodes_bbox_debug(nodes).orderBy("conv_id", "turn_idx", "node_idx", "page")
 
 
@@ -93,7 +90,6 @@ def q_parse_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     transcripts = documents_as_transcripts(_tbl(spark, sf_dir, "documents"))
     nodes = parse_transcripts(
         transcripts,
-        repartition_for_skew="auto",
         output_columns=["conv_id", "turn_idx", "node_idx", "tokens"],
     )
     return parse_quality_metrics(nodes)
@@ -622,7 +618,6 @@ def q_export_relations(spark: SparkSession, sf_dir: str) -> DataFrame:
     transcripts = documents_as_transcripts(_tbl(spark, sf_dir, "documents"))
     nodes = parse_transcripts(
         transcripts,
-        repartition_for_skew="auto",
         output_columns=["conv_id", "turn_idx", "node_idx", "text"],
     )
     return nodes_with_relations(nodes).select(
@@ -1915,7 +1910,6 @@ def q_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     transcripts = documents_as_transcripts(_tbl(spark, sf_dir, "documents"))
     nodes = parse_transcripts(
         transcripts,
-        repartition_for_skew="auto",
         output_columns=["conv_id", "turn_idx", "node_idx", "tokens"],
     )
     return extraction_metrics(nodes)
@@ -1946,7 +1940,6 @@ def q_parse_metrics_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     transcripts = documents_as_transcripts(_tbl(spark, sf_dir, "documents"))
     nodes = parse_transcripts(
         transcripts,
-        repartition_for_skew="auto",
         output_columns=["conv_id", "turn_idx", "node_idx", "text", "tokens"],
     )
     m = parse_quality_metrics(nodes).select(
@@ -2009,7 +2002,6 @@ def q_eval_metrics_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     transcripts = documents_as_transcripts(_tbl(spark, sf_dir, "documents"))
     nodes = parse_transcripts(
         transcripts,
-        repartition_for_skew="auto",
         output_columns=["conv_id", "turn_idx", "node_idx", "tokens"],
     )
     e = extraction_metrics(nodes)
@@ -2047,7 +2039,6 @@ def q_eval_variant_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     transcripts = documents_as_transcripts(_tbl(spark, sf_dir, "documents"))
     nodes = parse_transcripts(
         transcripts,
-        repartition_for_skew="auto",
         output_columns=["conv_id", "turn_idx", "node_idx", "variant", "tokens"],
     )
     return variant_mix(nodes)
@@ -2060,7 +2051,6 @@ def q_conversation_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     transcripts = documents_as_transcripts(_tbl(spark, sf_dir, "documents"))
     nodes = parse_transcripts(
         transcripts,
-        repartition_for_skew="auto",
         output_columns=["conv_id", "turn_idx", "node_idx", "text", "tokens"],
     )
     return conversation_assembly(nodes)
@@ -2156,7 +2146,6 @@ def q_export_relations_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     transcripts = documents_as_transcripts(_tbl(spark, sf_dir, "documents"))
     nodes = parse_transcripts(
         transcripts,
-        repartition_for_skew="auto",
         output_columns=["conv_id", "turn_idx", "node_idx", "text"],
     )
     rel = nodes_with_relations(nodes)
@@ -3173,9 +3162,7 @@ def q_parse_html_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.expr(_html_doc_expr("cast(doc_id as string)")).alias("text"),
     )
-    return parse_transcripts(
-        documents_as_transcripts(wrapped), repartition_for_skew="auto"
-    ).select("conv_id", "turn_idx", "node_idx", "text", "tokens")
+    return parse_transcripts(documents_as_transcripts(wrapped)).select("conv_id", "turn_idx", "node_idx", "text", "tokens")
 
 
 def q_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -13,8 +13,8 @@ Production layout recommendations (encoded here so deployments inherit them):
   the wave write + checkpoint append become one atomic snapshot commit).
 - `write.target-file-size-bytes` <= 128 MB and row groups <= 16 MB so the
   zero-shuffle parse gets enough scan splits at any executor count
-  (`pipeline.py` auto mode re-splits by `maxPartitionBytes` from file
-  metadata).
+  (below one effective split per core, `spark/scan.py:ensure_parallelism`
+  adds a hash exchange instead).
 - sort order (conv_id, turn_idx) within files: keeps per-conversation reads
   clustered for downstream conversation-level ops without forcing a shuffle
   here.

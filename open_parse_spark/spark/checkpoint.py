@@ -118,95 +118,87 @@ def run_resumable(
     pending = [b for b in range(n_buckets) if b not in done]
     processed: List[int] = []
 
-    try:
-        wave_no = 0
-        while pending:
-            if max_waves is not None and wave_no >= max_waves:
-                break
-            wave = pending[:buckets_per_wave]
-            pending = pending[buckets_per_wave:]
-            wave_no += 1
+    wave_no = 0
+    while pending:
+        if max_waves is not None and wave_no >= max_waves:
+            break
+        wave = pending[:buckets_per_wave]
+        pending = pending[buckets_per_wave:]
+        wave_no += 1
 
-            t0 = time.monotonic()
-            wave_input = transcripts.withColumn("bucket", bucket_expr(n_buckets)).where(
-                F.col("bucket").isin(wave)
-            )
-            input_rows_by_bucket = {
-                r["bucket"]: r["cnt"]
-                for r in wave_input.groupBy("bucket")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .collect()
-            }
+        t0 = time.monotonic()
+        wave_input = transcripts.withColumn("bucket", bucket_expr(n_buckets)).where(
+            F.col("bucket").isin(wave)
+        )
+        input_rows_by_bucket = {
+            r["bucket"]: r["cnt"]
+            for r in wave_input.groupBy("bucket")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .collect()
+        }
 
-            nodes = parse_transcripts(
-                wave_input.drop("bucket"),
-                repartition_for_skew=repartition_for_skew,
-            ).withColumn("bucket", bucket_expr(n_buckets))
+        nodes = parse_transcripts(
+            wave_input.drop("bucket"),
+            repartition_for_skew=repartition_for_skew,
+        ).withColumn("bucket", bucket_expr(n_buckets))
 
-            # idempotent per-bucket overwrite: output first ...
-            (
-                nodes.write.mode("overwrite")
-                .partitionBy("bucket")
-                .option("partitionOverwriteMode", "dynamic")
-                .parquet(out_path)
-            )
-            wall_ms = int((time.monotonic() - t0) * 1000)
+        # idempotent per-bucket overwrite: output first ...
+        (
+            nodes.write.mode("overwrite")
+            .partitionBy("bucket")
+            .option("partitionOverwriteMode", "dynamic")
+            .parquet(out_path)
+        )
+        wall_ms = int((time.monotonic() - t0) * 1000)
 
-            # ... checkpoint rows strictly after (write-ahead ordering).
-            # schema-pinned read: an all-empty wave leaves only _SUCCESS in
-            # out_path and a bare parquet read would fail schema inference,
-            # wedging resume permanently (review finding)
-            stats = (
-                spark.read.schema(nodes.schema)
-                .parquet(out_path)
-                .where(F.col("bucket").isin(wave))
-            )
-            lineage = (
-                _row_checksum(stats)
-                .withColumn("wall_ms", F.lit(wall_ms))
-                .withColumn("run_id", F.lit(run_id))
-            )
-            lineage_rows = lineage.collect()
-            lineage_pdf = spark.createDataFrame(
-                [
-                    (
-                        r["bucket"],
-                        int(input_rows_by_bucket.get(r["bucket"], 0)),
-                        r["output_nodes"],
-                        r["parse_errors"],
-                        r["wall_ms"],
-                        r["checksum"],
-                        r["run_id"],
-                        n_buckets,
-                    )
-                    for r in lineage_rows
-                ]
-                + [
-                    # buckets that produced zero nodes still need a lineage row
-                    (
-                        b,
-                        int(input_rows_by_bucket.get(b, 0)),
-                        0,
-                        0,
-                        wall_ms,
-                        0,
-                        run_id,
-                        n_buckets,
-                    )
-                    for b in wave
-                    if b not in {r["bucket"] for r in lineage_rows}
-                ],
-                schema=CHECKPOINT_SCHEMA,
-            )
-            lineage_pdf.write.mode("append").parquet(checkpoint_path)
-            processed.extend(wave)
-
-    finally:
-        # success or failure, undo any scan-split conf auto mode lowered
-        # (a mid-wave crash must not leak the lowered split size — review)
-        from open_parse_spark.spark.pipeline import restore_split_conf
-
-        restore_split_conf(spark)
+        # ... checkpoint rows strictly after (write-ahead ordering).
+        # schema-pinned read: an all-empty wave leaves only _SUCCESS in
+        # out_path and a bare parquet read would fail schema inference,
+        # wedging resume permanently (review finding)
+        stats = (
+            spark.read.schema(nodes.schema)
+            .parquet(out_path)
+            .where(F.col("bucket").isin(wave))
+        )
+        lineage = (
+            _row_checksum(stats)
+            .withColumn("wall_ms", F.lit(wall_ms))
+            .withColumn("run_id", F.lit(run_id))
+        )
+        lineage_rows = lineage.collect()
+        lineage_pdf = spark.createDataFrame(
+            [
+                (
+                    r["bucket"],
+                    int(input_rows_by_bucket.get(r["bucket"], 0)),
+                    r["output_nodes"],
+                    r["parse_errors"],
+                    r["wall_ms"],
+                    r["checksum"],
+                    r["run_id"],
+                    n_buckets,
+                )
+                for r in lineage_rows
+            ]
+            + [
+                # buckets that produced zero nodes still need a lineage row
+                (
+                    b,
+                    int(input_rows_by_bucket.get(b, 0)),
+                    0,
+                    0,
+                    wall_ms,
+                    0,
+                    run_id,
+                    n_buckets,
+                )
+                for b in wave
+                if b not in {r["bucket"] for r in lineage_rows}
+            ],
+            schema=CHECKPOINT_SCHEMA,
+        )
+        lineage_pdf.write.mode("append").parquet(checkpoint_path)
+        processed.extend(wave)
 
     return ResumableResult(
         processed_buckets=processed,

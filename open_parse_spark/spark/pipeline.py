@@ -7,21 +7,21 @@ Spark-first design (SURVEY §3.4, §7.0):
   a turn, embarrassingly parallel *across* turns.  It runs inside an Arrow
   ``mapInPandas`` UDF: batched Arrow transfer, zero per-row (Spark-level)
   Python UDF calls.
-- skew handling is explicit: a payload-size histogram (approx quantiles of
-  ``length(text)+length(tool)``) sizes the map parallelism, and the
-  repartition key is a *turn-level* hash — the finest salting possible, so a
-  single giant conv_id can never pin a partition (north rule: "salted,
-  skew-aware map over conv_id-bucketed partitions with explicit
-  repartitioning by payload-size histograms").
+- skew handling is explicit and has ONE rule, ``spark/scan.py``'s
+  ``ensure_parallelism``: when the scan's effective partitions (splits
+  capped by parquet row groups) are fewer than the cores, one hash exchange
+  on the *turn-level* key ``(conv_id, turn_idx)`` — the finest salt
+  possible, so a single giant conv_id can never pin a partition — spreads
+  the turns over 2x cores tasks.  The session's split conf is never
+  touched.
 - Arrow batches are bounded (``spark.sql.execution.arrow.maxRecordsPerBatch``)
   so the heavy tail of payload sizes cannot blow executor memory.
 
 Scale notes (100 TB / 1000 executors):
-- the job is a pure map: no shuffle at all unless ``repartition_for_skew``
-  is enabled (one round-robin-by-hash shuffle, fully parallel, no hot keys
-  by construction).  At 100 TB you keep it on: the scan's natural file
-  splits correlate with conv_id (Iceberg bucketed layout), and payload skew
-  would otherwise produce straggler tasks.
+- the job is a pure map: byte-ranged parquet/Iceberg splits vastly
+  outnumber the cores, so no shuffle happens.  The exchange fires only for
+  small or unsplittable inputs, where moving the bytes once costs far less
+  than parsing them on one core.
 - per-executor state (the tokenizer) is a process-global initialized once
   per Python worker, mirroring the reference's module-import model loading
   (``tables/table_transformers/ml.py:58-86``).
@@ -30,7 +30,7 @@ Scale notes (100 TB / 1000 executors):
 from __future__ import annotations
 
 from operator import attrgetter
-from typing import Iterator, List, Optional, Tuple
+from typing import Iterator, List, Optional
 
 import pandas as pd
 
@@ -44,6 +44,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from open_parse_spark.spark.scan import ensure_parallelism
 
 BBOX_TYPE = StructType(
     [
@@ -173,132 +175,9 @@ def _node_rows(columns=None, transforms=None):
     return node_rows
 
 
-# spark.sql.files.maxPartitionBytes values from before the first auto-mode
-# parse lowered them, keyed by session identity (None = conf was unset)
-_PRIOR_SPLIT_CONF: dict = {}
-
-
-def _session_key(spark) -> str:
-    # applicationId is stable for a session's lifetime and never reused the
-    # way id(spark) can be after GC (review finding: a recycled address
-    # could restore a dead session's stale conf onto a new session)
-    return spark.sparkContext.applicationId
-
-
-def restore_split_conf(spark) -> None:
-    """Restore ``spark.sql.files.maxPartitionBytes`` to its pre-parse value.
-
-    Auto skew mode lowers the session conf so the (lazy) parse job gets
-    enough scan splits; the lowered value must survive until the job's
-    terminal action runs, so the parse itself cannot restore it.  Call this
-    after the action completes (run_resumable does) so unrelated later
-    queries in the same session don't inherit tiny splits."""
-    prior = _PRIOR_SPLIT_CONF.pop(_session_key(spark), _MISSING)
-    if prior is _MISSING:
-        return
-    if prior is None:
-        spark.conf.unset("spark.sql.files.maxPartitionBytes")
-    else:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", prior)
-
-
-_MISSING = object()
-
-
-def _input_file_bytes(df: DataFrame) -> int:
-    """Total input bytes from file metadata (no data is read)."""
-    import os
-
-    total = 0
-    try:
-        for f in df.inputFiles():
-            if f.startswith("file:"):
-                f = f[len("file:") :]
-            try:
-                total += os.stat(f).st_size
-            except OSError:
-                return 0
-    except Exception:
-        return 0
-    return total
-
-
-def _input_row_groups(df: DataFrame) -> int:
-    """Total parquet row groups across the source files (footer metadata
-    only, no data read).  Byte-ranged splits cannot spread rows across more
-    tasks than there are row groups — a 1-row-group file parses on ONE core
-    no matter how many splits the scan conf plans — so the effective scan
-    parallelism is ``min(n_splits, n_row_groups)``.  Only called when the
-    split count is already below ~3x the core count, so the file list (and
-    the footer reads) are small by construction."""
-    try:
-        import pyarrow.parquet as pq
-
-        total = 0
-        for f in df.inputFiles():
-            if f.startswith("file:"):
-                f = f[len("file:") :]
-            if not f.endswith(".parquet"):
-                return 1 << 30  # non-parquet: assume freely splittable
-            total += pq.ParquetFile(f).metadata.num_row_groups
-        return total
-    except Exception:
-        return 1 << 30  # metadata unavailable: keep the prior behavior
-
-
-def payload_size_histogram(
-    df: DataFrame,
-    probabilities: Tuple[float, ...] = (0.5, 0.9, 0.99, 1.0),
-    sample_fraction: Optional[float] = None,
-) -> dict:
-    """Approximate payload-size histogram used to size the map parallelism.
-
-    One pass over just the two length expressions (column-pruned scan);
-    approxQuantile is a driver-side sketch merge, no full shuffle.  At scale,
-    sample: the histogram only needs ~1e4 rows to plan partitioning (at
-    100 TB you would read it off Iceberg column stats instead).
-    """
-    scale = 1.0
-    if sample_fraction is not None and 0 < sample_fraction < 1:
-        df = df.sample(fraction=sample_fraction, seed=42)
-        scale = 1.0 / sample_fraction
-    sized = df.select(
-        (
-            F.coalesce(F.length("text"), F.lit(0))
-            + F.coalesce(F.length("tool"), F.lit(0))
-        ).alias("payload_len")
-    )
-    quantiles = sized.stat.approxQuantile("payload_len", list(probabilities), 0.01)
-    agg = sized.agg(
-        F.sum("payload_len").alias("total_bytes"),
-        F.count(F.lit(1)).alias("rows"),
-    ).collect()[0]
-    return {
-        "quantiles": dict(zip(probabilities, quantiles)),
-        "total_bytes": int((agg["total_bytes"] or 0) * scale),
-        "rows": int(agg["rows"] * scale),
-    }
-
-
-def plan_partitions(
-    hist: dict,
-    default_parallelism: int,
-    target_bytes_per_partition: int = 64 * 1024 * 1024,
-) -> int:
-    """Histogram -> partition count.  At least 2x cores (pipelining/straggler
-    slack), at most what keeps partitions under the byte target assuming the
-    p99 tail dominates."""
-    by_bytes = int(hist["total_bytes"] / max(1, target_bytes_per_partition)) + 1
-    return max(2 * default_parallelism, by_bytes)
-
-
 def parse_transcripts(
     df: DataFrame,
-    repartition_for_skew: "bool | str" = "auto",
-    num_partitions: Optional[int] = None,
-    target_bytes_per_partition: int = 64 * 1024 * 1024,
-    histogram_sample: Optional[float] = 0.01,
-    drop_errors: bool = False,
+    repartition_for_skew: bool = True,
     output_columns: Optional[list] = None,
 ) -> DataFrame:
     """transcripts (conv_id, turn_idx, role, text, tool, ts) -> node rows.
@@ -306,18 +185,12 @@ def parse_transcripts(
     Column pruning happens here (only INPUT_COLS reach the scan).
 
     ``repartition_for_skew``:
-    - ``False``: pure map over the scan's natural splits (zero shuffle).
-    - ``True``: always shuffle on a *turn-level* hash (the finest salt — no
-      conv_id, however large, can dominate a partition).  Needed only for
-      non-splittable / conv-clustered sources; shuffling fat string rows is
-      GC-heavy, so prefer ``auto``.
-    - ``"auto"`` (default): use the payload-size histogram to size the scan
-      splits themselves (``spark.sql.files.maxPartitionBytes``) — balancing
-      at the scan, moving zero bytes.  Turns are independent, so there is no
-      algorithmic need for co-location; byte-ranged parquet/Iceberg splits
-      are inherently size-balanced even under conv_id clustering.  Falls
-      back to the salted shuffle only when the source is not file-split
-      (e.g. an in-memory DataFrame) and remains under-split.
+    - ``True`` (default): ``ensure_parallelism`` — when the scan's effective
+      partitions (splits capped by parquet row groups) are fewer than the
+      cores, one hash exchange on ``(conv_id, turn_idx)`` spreads the turns
+      over 2x cores tasks (a turn-level key: no conv_id, however large, can
+      pin a partition); otherwise a pure map over the scan's splits.
+    - ``False``: always the pure map (zero shuffle).
 
     ``output_columns``: any subset of NODE_SCHEMA that includes conv_id,
     turn_idx and node_idx (default: all of it); the UDF builds only these.
@@ -329,99 +202,12 @@ def parse_transcripts(
     unknown = [c for c in cols if c not in NODE_SCHEMA.fieldNames()]
     if unknown:
         raise ValueError(f"unknown output columns {unknown}")
-    spark = df.sparkSession
     pruned = df.select(*INPUT_COLS)
-    parallelism = spark.sparkContext.defaultParallelism
-    if repartition_for_skew is True:
-        planned = num_partitions
-        if planned is None:
-            hist = payload_size_histogram(pruned, sample_fraction=histogram_sample)
-            planned = plan_partitions(hist, parallelism, target_bytes_per_partition)
-        # turn-level salt: uniform by construction, no hot conv_id keys
-        salted = pruned.withColumn(
-            "_salt", F.xxhash64(F.col("conv_id"), F.col("turn_idx"))
-        )
-        pruned = salted.repartition(planned, "_salt").drop("_salt")
-    elif repartition_for_skew == "auto":
-        n_splits = pruned.rdd.getNumPartitions()
-        total_bytes = 0
-        # target ~3 waves per core, not just >=1: per-task parse time varies
-        # with payload mix, so a 1-2 wave schedule is straggler-ragged; at
-        # 100 TB natural splits vastly exceed this and the conf is untouched
-        if n_splits < 3 * parallelism:
-            # re-split the scan from file-size metadata (no data scan):
-            # target ~3 waves per core, >=1 MiB splits
-            total_bytes = _input_file_bytes(df)
-            if total_bytes > 0:
-                split_bytes = max(
-                    1 << 18,  # 256 KiB floor: a split below one row group is
-                    # harmless (empty splits schedule in microseconds), and
-                    # small inputs need sub-MiB splits to reach 3 waves
-                    min(
-                        target_bytes_per_partition,
-                        total_bytes // (3 * parallelism) or 1 << 18,
-                    ),
-                )
-                # session-level conf (it must still be set at execution
-                # time, so it cannot be scoped to this call — Spark reads it
-                # lazily when the action runs); only lower it when the input
-                # is big enough that re-splitting matters, record the prior
-                # value, and let a terminal operation call
-                # restore_split_conf() once its actions finish (run_resumable
-                # does)
-                if total_bytes >= 8 * (1 << 20):
-                    key = _session_key(spark)
-                    if key not in _PRIOR_SPLIT_CONF:
-                        _PRIOR_SPLIT_CONF[key] = spark.conf.get(
-                            "spark.sql.files.maxPartitionBytes", None
-                        )
-                    spark.conf.set(
-                        "spark.sql.files.maxPartitionBytes", str(split_bytes)
-                    )
-                    # re-probe a FRESH projection: DataFrame.rdd is cached,
-                    # so pruned.rdd would still report the pre-lowering count
-                    n_splits = df.select(*INPUT_COLS).rdd.getNumPartitions()
-        # a big file-backed source is already size-balanced by byte-ranged
-        # splits.  But splits only parallelize down to ROW GROUPS: a small
-        # source (one tiny file, or files written as single row groups)
-        # stays effectively under-split however low the split conf goes,
-        # and the parse is CPU-bound — leaving cores idle costs seconds
-        # while moving the source's bytes once costs milliseconds.  So the
-        # salted-shuffle fallback now covers ANY source whose effective
-        # parallelism (splits capped by row groups) is below the core
-        # count, not just non-file sources (r6: parse_flagship ran its
-        # whole 5k-doc parse on one core at 32).
-        effective = n_splits
-        if total_bytes > 0:
-            # only reached when the initial split count was < 3x cores, so
-            # the file list is small and the footer reads are cheap
-            effective = min(n_splits, _input_row_groups(df))
-        if effective < parallelism:
-            planned = num_partitions
-            if planned is None and total_bytes > 0:
-                # size known from metadata: plan directly, no histogram jobs
-                planned = max(
-                    2 * parallelism,
-                    total_bytes // target_bytes_per_partition + 1,
-                )
-            elif planned is None:
-                # non-file source: payload-size-histogram partition plan
-                hist = payload_size_histogram(
-                    pruned, sample_fraction=histogram_sample
-                )
-                planned = plan_partitions(
-                    hist, parallelism, target_bytes_per_partition
-                )
-            salted = pruned.withColumn(
-                "_salt", F.xxhash64(F.col("conv_id"), F.col("turn_idx"))
-            )
-            pruned = salted.repartition(planned, "_salt").drop("_salt")
-    nodes = pruned.mapInPandas(
+    if repartition_for_skew:
+        pruned = ensure_parallelism(pruned, "conv_id", "turn_idx", factor=2)
+    return pruned.mapInPandas(
         _node_rows(cols), schema=StructType([NODE_SCHEMA[c] for c in cols])
     )
-    if drop_errors:
-        nodes = nodes.where(F.col("node_idx") >= 0)
-    return nodes
 
 
 def nodes_output(nodes: DataFrame) -> DataFrame:

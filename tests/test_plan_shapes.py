@@ -4,6 +4,9 @@ plan SHAPE so a refactor can't silently reintroduce a shuffle or a cartesian
 product.  String-matching the physical plan is deliberately coarse — these
 tests pin structure, not cosmetics."""
 
+import os
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -23,27 +26,32 @@ def _bench_transcripts() -> str:
     return bench._ensure_bench_transcripts()
 
 
+SPLIT_CONF = "spark.sql.files.maxPartitionBytes"
+
+
 def test_parse_is_zero_shuffle(spark):
+    """The 32-file bench corpus has more splits than cores: the default
+    parse is a pure map and leaves the session's split conf alone."""
     from open_parse_spark.spark.pipeline import parse_transcripts
 
+    prior = spark.conf.get(SPLIT_CONF)
     t = spark.read.parquet(_bench_transcripts())
-    plan = _plan(parse_transcripts(t, repartition_for_skew=False))
+    plan = _plan(parse_transcripts(t))
     assert "Exchange" not in plan, plan
     assert "CartesianProduct" not in plan
+    assert spark.conf.get(SPLIT_CONF) == prior
 
 
-def test_single_file_auto_resplit_has_no_exchange(spark, tmp_path):
-    """One ~11 MB file with 256-row row groups plans 3 default splits on
-    local[4]; auto mode lowers the split conf and must then see the finer
-    split count, so the parse stays a pure map (no salted shuffle)."""
-    import os
-
+def test_single_file_under_split_takes_one_hash_exchange(spark, tmp_path):
+    """One ~11 MB file with 256-row row groups plans 3 splits on local[4]:
+    the parse takes exactly one hash exchange on the turn key, and the
+    session's split conf is unchanged."""
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from open_parse_spark.data.synth import gen_transcripts
-    from open_parse_spark.spark.pipeline import parse_transcripts, restore_split_conf
+    from open_parse_spark.spark.pipeline import parse_transcripts
 
     base = gen_transcripts(n_convs=400, avg_turns=6, seed=3)
     pdf = pd.concat(
@@ -60,22 +68,52 @@ def test_single_file_auto_resplit_has_no_exchange(spark, tmp_path):
     )
     size = os.path.getsize(path)
     assert 8 << 20 <= size < 16 << 20, size
-    conf = "spark.sql.files.maxPartitionBytes"
-    prior = spark.conf.get(conf, None)
-    spark.conf.unset(conf)
+    prior = spark.conf.get(SPLIT_CONF)
+    t = spark.read.parquet(path)
+    assert t.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
+    plan = _plan(parse_transcripts(t))
+    assert plan.count("Exchange") == 1, plan
+    assert re.search(r"Exchange hashpartitioning\(conv_id#\w+, turn_idx#\w+, ", plan), plan
+    assert spark.conf.get(SPLIT_CONF) == prior
+
+
+def test_row_group_cap_repartitions_single_row_group(spark, tmp_path):
+    """A one-row-group file read with at least one split per core still
+    runs on ONE busy task (each row group is read by one split), so
+    ensure_parallelism — and the parse through it — must add exactly one
+    hash exchange."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from open_parse_spark.data.synth import gen_transcripts
+    from open_parse_spark.spark.pipeline import parse_transcripts
+    from open_parse_spark.spark.scan import ensure_parallelism
+
+    pdf = gen_transcripts(n_convs=40, avg_turns=6, seed=7)
+    pdf["doc_id"] = range(len(pdf))
+    path = str(tmp_path / "one_row_group.parquet")
+    pq.write_table(
+        pa.Table.from_pandas(pdf, preserve_index=False),
+        path,
+        row_group_size=len(pdf),
+        coerce_timestamps="us",
+        allow_truncated_timestamps=True,
+    )
+    assert pq.ParquetFile(path).metadata.num_row_groups == 1
+    cores = spark.sparkContext.defaultParallelism
+    prior = spark.conf.get(SPLIT_CONF)
+    spark.conf.set(SPLIT_CONF, str(max(1, os.path.getsize(path) // (2 * cores))))
     try:
-        parallelism = spark.sparkContext.defaultParallelism
         t = spark.read.parquet(path)
-        assert t.rdd.getNumPartitions() < parallelism  # under-split as read
-        plan = _plan(parse_transcripts(t))
-        assert int(spark.conf.get(conf)) == size // (3 * parallelism)
-        assert "Exchange" not in plan, plan
+        assert t.rdd.getNumPartitions() >= cores
+        plan = _plan(ensure_parallelism(t, "doc_id"))
+        assert plan.count("Exchange") == 1, plan
+        assert re.search(
+            r"Exchange hashpartitioning\(doc_id#\w+, \d+\), REPARTITION_BY_NUM", plan
+        ), plan
+        assert _plan(parse_transcripts(t)).count("Exchange") == 1
     finally:
-        restore_split_conf(spark)
-        if prior is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, prior)
+        spark.conf.set(SPLIT_CONF, prior)
 
 
 def test_decontaminate_broadcasts_benchmark(spark):

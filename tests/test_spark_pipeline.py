@@ -13,8 +13,6 @@ from open_parse_spark.data.synth import gen_transcripts
 from open_parse_spark.spark.pipeline import (
     nodes_output,
     parse_transcripts,
-    payload_size_histogram,
-    plan_partitions,
     run_turns_oracle,
 )
 
@@ -30,9 +28,10 @@ def transcripts_df(spark, transcripts_pdf):
 
 
 def _spark_nodes_pdf(df) -> pd.DataFrame:
-    out = nodes_output(
-        parse_transcripts(df, repartition_for_skew=True, num_partitions=16)
-    )
+    # one partition is under-split on the local[4] test session, so the
+    # default mode takes its hash exchange: the oracle and determinism
+    # checks run through it
+    out = nodes_output(parse_transcripts(df.coalesce(1)))
     pdf = out.select("conv_id", "turn_idx", "node_idx", "text", "tokens").toPandas()
     return pdf.reset_index(drop=True)
 
@@ -62,14 +61,6 @@ def test_determinism_two_runs(transcripts_df):
     a = _spark_nodes_pdf(transcripts_df)
     b = _spark_nodes_pdf(transcripts_df)
     pd.testing.assert_frame_equal(a, b)
-
-
-def test_histogram_and_partition_plan(transcripts_df):
-    hist = payload_size_histogram(transcripts_df)
-    assert hist["rows"] > 0 and hist["total_bytes"] > 0
-    assert hist["quantiles"][1.0] >= hist["quantiles"][0.5]
-    n = plan_partitions(hist, default_parallelism=4)
-    assert n >= 8
 
 
 def test_resume_exactly_once(spark, transcripts_df, tmp_path):
@@ -144,35 +135,6 @@ def test_resume_exactly_once(spark, transcripts_df, tmp_path):
     assert (lineage["input_rows"] >= 0).all()
 
     shutil.rmtree(tmp_path, ignore_errors=True)
-
-
-def test_split_conf_restored_after_parse(spark):
-    """Auto skew mode records the prior maxPartitionBytes before lowering it;
-    restore_split_conf puts the session back exactly (run_resumable calls it
-    after its terminal actions)."""
-    from open_parse_spark.spark.pipeline import (
-        _PRIOR_SPLIT_CONF,
-        _session_key,
-        restore_split_conf,
-    )
-
-    prior = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    # what auto mode does when the input is >= 8 MiB
-    _PRIOR_SPLIT_CONF[_session_key(spark)] = prior
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(1 << 20))
-    restore_split_conf(spark)
-    assert spark.conf.get("spark.sql.files.maxPartitionBytes") == prior
-    assert _session_key(spark) not in _PRIOR_SPLIT_CONF
-    # idempotent no-op when nothing was recorded
-    restore_split_conf(spark)
-    assert spark.conf.get("spark.sql.files.maxPartitionBytes") == prior
-
-
-def test_small_input_auto_mode_leaves_conf_untouched(spark, transcripts_df):
-    """Tiny inputs must not trigger the session-conf mutation at all."""
-    prior = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    parse_transcripts(transcripts_df, repartition_for_skew="auto").count()
-    assert spark.conf.get("spark.sql.files.maxPartitionBytes") == prior
 
 
 def test_narrow_output_columns_equal_full(spark, transcripts_df):
