@@ -7,8 +7,9 @@ append_transform extension point).
 
 - ``DocumentParser(processing_pipeline=...).parse(text, tool)`` — one
   document (turn payload) -> ``ParsedDocument`` of nodes, eagerly, locally.
-- ``DocumentParser.parse_table(spark_df)`` — the same pipeline distributed
-  over a transcripts DataFrame via Arrow ``mapInPandas``.
+- ``DocumentParser.parse_table(spark_df, **kwargs)`` — the same pipeline
+  distributed over a transcripts DataFrame by ``parse_transcripts`` (Arrow
+  ``mapInPandas``); ``kwargs`` are ``parse_transcripts``' options.
 - custom steps: subclass nothing — any ``list[Node] -> list[Node]`` callable
   appended via ``pipeline.append_transform`` (the reference's ProcessingStep
   subclassing collapses to a plain function here).
@@ -53,8 +54,6 @@ class BasicIngestionPipeline(IngestionPipeline):
 
     def __init__(self):
         super().__init__(basic_pipeline_transforms())
-        # snapshot for parse_table's stock-pipeline fast-path identity check
-        self._stock_transforms = tuple(self.transformations)
 
 
 class SemanticIngestionPipeline(IngestionPipeline):
@@ -115,39 +114,13 @@ class DocumentParser:
         return ParsedDocument(nodes=nodes, filename=filename, num_pages=num_pages)
 
     def parse_table(self, transcripts_df, **kwargs):
-        """Distributed: transcripts DataFrame -> node rows (the pipeline's
-        transforms ship to executors inside the Arrow UDF)."""
-        from open_parse_spark.spark.pipeline import (
-            INPUT_COLS,
-            NODE_SCHEMA,
-            _node_rows,
-            parse_transcripts,
-        )
+        """Distributed: transcripts DataFrame -> node rows, through
+        ``parse_transcripts`` with this pipeline's transforms (they ship to
+        executors inside the Arrow UDF).  ``kwargs`` are
+        ``parse_transcripts``' options (``repartition_for_skew``,
+        ``output_columns``), for every pipeline."""
+        from open_parse_spark.spark.pipeline import parse_transcripts
 
-        transforms = self.processing_pipeline.transformations
-        stock = getattr(self.processing_pipeline, "_stock_transforms", None)
-        if (
-            type(self.processing_pipeline) is BasicIngestionPipeline
-            and stock is not None
-            and len(transforms) == len(stock)
-            and all(a is b for a, b in zip(transforms, stock))
-        ):
-            # untouched stock pipeline: the parse_transcripts path.  The
-            # check is element-wise IDENTITY against the list captured at
-            # construction — a type+length check alone would silently route
-            # an in-place-replaced transform to the stock path (review)
-            return parse_transcripts(transcripts_df, **kwargs)
-        if kwargs:
-            # the custom-pipeline path has no skew/option plumbing; dropping
-            # kwargs silently would diverge from the stock path's behavior
-            raise TypeError(
-                f"parse_table options {sorted(kwargs)} are only supported "
-                "with the stock pipeline"
-            )
-
-        # the same row encoder as parse_transcripts, with this pipeline's
-        # transforms: a malformed payload becomes one node_idx=-1
-        # parse_error row, never a failed job
-        return transcripts_df.select(*INPUT_COLS).mapInPandas(
-            _node_rows(transforms=transforms), schema=NODE_SCHEMA
+        return parse_transcripts(
+            transcripts_df, transforms=self.processing_pipeline.transformations, **kwargs
         )

@@ -599,15 +599,14 @@ def q_parse_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemanticIngestionPipeline variant (P11, reference ingest.py:95-136)
     with the deterministic hashing-embedding client."""
     from open_parse_spark.core.semantic import semantic_pipeline_transforms
-    from open_parse_spark.spark.pipeline import INPUT_COLS, _node_rows
 
     transcripts = documents_as_transcripts(_tbl(spark, sf_dir, "documents"))
     # min_tokens is a constructor param in the reference too
     # (ingest.py:100-106); 16 keeps small synthetic docs visible
-    transforms = semantic_pipeline_transforms(min_tokens=16)
-    return transcripts.select(*INPUT_COLS).mapInPandas(
-        _node_rows(("conv_id", "turn_idx", "node_idx", "text", "tokens"), transforms),
-        "conv_id string, turn_idx int, node_idx int, text string, tokens long",
+    return parse_transcripts(
+        transcripts,
+        output_columns=["conv_id", "turn_idx", "node_idx", "text", "tokens"],
+        transforms=semantic_pipeline_transforms(min_tokens=16),
     )
 
 
@@ -3162,7 +3161,10 @@ def q_parse_html_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.expr(_html_doc_expr("cast(doc_id as string)")).alias("text"),
     )
-    return parse_transcripts(documents_as_transcripts(wrapped)).select("conv_id", "turn_idx", "node_idx", "text", "tokens")
+    return parse_transcripts(
+        documents_as_transcripts(wrapped),
+        output_columns=["conv_id", "turn_idx", "node_idx", "text", "tokens"],
+    )
 
 
 def q_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,4 +1,5 @@
-"""Transcript table source — Iceberg first, parquet fallback.
+"""Transcript table source — Iceberg first, parquet fallback.  Read side
+only: node output is written by ``spark/checkpoint.py:run_resumable``.
 
 The production input (BASELINE.json `input_hint`) is an Iceberg table of
 ``(conv_id string, turn_idx int, role string, text string, tool string,
@@ -54,35 +55,3 @@ def load_transcripts(spark: SparkSession, source: str) -> DataFrame:
         raise ValueError(f"transcripts source {source!r} missing columns {missing}")
     return df.select(*TRANSCRIPT_COLUMNS)
 
-
-def write_nodes(
-    nodes: DataFrame,
-    target: str,
-    mode: str = "overwrite",
-    partition_cols: tuple = ("bucket",),
-) -> None:
-    """Write node output — Iceberg table (atomic snapshot) or parquet dirs
-    (per-bucket dynamic overwrite, see checkpoint.py for the resume
-    protocol)."""
-    if "/" not in target and iceberg_available(nodes.sparkSession):
-        writer = nodes.writeTo(target)
-        if mode == "overwrite":
-            writer.overwritePartitions()
-        else:
-            writer.append()
-        return
-    missing = [c for c in partition_cols if c not in nodes.columns]
-    if missing:
-        # silently writing unpartitioned would turn the per-bucket dynamic
-        # overwrite into a FULL-target overwrite, deleting every committed
-        # bucket from earlier waves (review finding)
-        raise ValueError(
-            f"partition columns {missing} absent from nodes "
-            f"(have {nodes.columns}); refusing a non-partitioned overwrite"
-        )
-    (
-        nodes.write.mode(mode)
-        .partitionBy(*partition_cols)
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(target)
-    )

@@ -62,17 +62,17 @@ def _completed_buckets(
 ) -> set:
     if not os.path.exists(checkpoint_path):
         return set()
-    try:
-        ck = spark.read.parquet(checkpoint_path)
-        rows = ck.select("bucket").distinct().collect()
-        recorded = (
-            ck.select("n_buckets").distinct().collect()
-            if "n_buckets" in ck.columns
-            else []
-        )
-    except Exception:
-        return set()
-    bad = {r["n_buckets"] for r in recorded} - {n_buckets, None}
+    # schema-pinned, one job: an unreadable checkpoint raises instead of
+    # looking empty (which would re-parse every bucket), and a checkpoint
+    # written before n_buckets was recorded reads it as null
+    rows = (
+        spark.read.schema(CHECKPOINT_SCHEMA)
+        .parquet(checkpoint_path)
+        .select("bucket", "n_buckets")
+        .distinct()
+        .collect()
+    )
+    bad = {r["n_buckets"] for r in rows} - {n_buckets, None}
     if bad:
         # resuming with a different bucket count would re-parse
         # conversations into NEW bucket dirs while the old dirs survive —
@@ -107,12 +107,13 @@ def run_resumable(
     buckets_per_wave: int = 4,
     run_id: str = "run",
     max_waves: Optional[int] = None,
-    repartition_for_skew: bool = False,
 ) -> ResumableResult:
     """Process all not-yet-checkpointed conv_id buckets, wave by wave.
 
     ``max_waves`` lets tests simulate a mid-job kill: stop after k waves,
-    call again to resume.
+    call again to resume.  Each wave parses with
+    ``repartition_for_skew=False``, a pure map: the under-split probe would
+    add a partition-count job to every wave.
     """
     done = _completed_buckets(spark, checkpoint_path, n_buckets)
     pending = [b for b in range(n_buckets) if b not in done]
@@ -138,8 +139,7 @@ def run_resumable(
         }
 
         nodes = parse_transcripts(
-            wave_input.drop("bucket"),
-            repartition_for_skew=repartition_for_skew,
+            wave_input.drop("bucket"), repartition_for_skew=False
         ).withColumn("bucket", bucket_expr(n_buckets))
 
         # idempotent per-bucket overwrite: output first ...

@@ -1,5 +1,11 @@
 """The distributed parse pipeline — transcripts in, content nodes out.
 
+``parse_transcripts`` is the one builder of node rows: the batch queries,
+``spark/checkpoint.py:run_resumable``, ``streaming/jobs.py:streaming_parse``,
+``DocumentParser.parse_table`` and ``q_parse_semantic`` all call it, so the
+column pruning, the under-split rule, the output validation and the schema
+are the same on every path.
+
 Spark-first design (SURVEY §3.4, §7.0):
 
 - the per-turn parse (extraction + the order-dependent node pipeline) is a
@@ -121,17 +127,18 @@ _NODE_COLUMNS = {
 }
 
 
-def _node_rows(columns=None, transforms=None):
+def _node_rows(columns, transforms):
     """mapInPandas body factory: one Arrow batch of turns -> node rows.
 
     ``columns`` is any subset of NODE_SCHEMA that includes
-    ``_REQUIRED_OUTPUT`` (default: all of it); projection pruning cannot reach
-    inside a Python UDF, so a narrow query never builds the columns it drops.
-    ``transforms`` is passed to ``parse_turn`` (default: the stock pipeline).
+    ``_REQUIRED_OUTPUT``; projection pruning cannot reach inside a Python
+    UDF, so a narrow query never builds the columns it drops.
+    ``transforms`` is passed to ``parse_turn`` (``None``: the stock pipeline;
+    ``[]``: no transforms).
     A turn whose parse raises becomes one ``node_idx = -1`` row carrying the
     exception in ``parse_error`` — lineage: never lose a turn silently.
     """
-    names = tuple(columns or NODE_SCHEMA.fieldNames())
+    names = tuple(columns)
     extra = [(c, *_NODE_COLUMNS[c]) for c in names if c not in _REQUIRED_OUTPUT]
 
     def node_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -179,6 +186,7 @@ def parse_transcripts(
     df: DataFrame,
     repartition_for_skew: bool = True,
     output_columns: Optional[list] = None,
+    transforms: Optional[list] = None,
 ) -> DataFrame:
     """transcripts (conv_id, turn_idx, role, text, tool, ts) -> node rows.
 
@@ -191,9 +199,13 @@ def parse_transcripts(
       over 2x cores tasks (a turn-level key: no conv_id, however large, can
       pin a partition); otherwise a pure map over the scan's splits.
     - ``False``: always the pure map (zero shuffle).
+    A streaming frame is always the pure map.
 
     ``output_columns``: any subset of NODE_SCHEMA that includes conv_id,
     turn_idx and node_idx (default: all of it); the UDF builds only these.
+
+    ``transforms``: the node pipeline run on each turn, passed through
+    unchanged (``None``: the stock pipeline; ``[]``: no transforms).
     """
     cols = list(NODE_SCHEMA.fieldNames() if output_columns is None else output_columns)
     missing = [c for c in _REQUIRED_OUTPUT if c not in cols]
@@ -206,7 +218,7 @@ def parse_transcripts(
     if repartition_for_skew:
         pruned = ensure_parallelism(pruned, "conv_id", "turn_idx", factor=2)
     return pruned.mapInPandas(
-        _node_rows(cols), schema=StructType([NODE_SCHEMA[c] for c in cols])
+        _node_rows(cols, transforms), schema=StructType([NODE_SCHEMA[c] for c in cols])
     )
 
 

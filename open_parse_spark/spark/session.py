@@ -11,8 +11,6 @@ def get_spark(
     app_name: str = "open-parse-spark",
     master: str | None = None,
     shuffle_partitions: int = 32,
-    arrow_max_records_per_batch: int = 512,
-    max_partition_bytes: str = "32m",
 ) -> SparkSession:
     """Arrow enabled, small Arrow batches (megabyte payloads must not blow up
     executor memory: FIXTURES payloads are log-normal with a heavy tail), AQE
@@ -23,15 +21,12 @@ def get_spark(
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            str(arrow_max_records_per_batch),
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # smaller input splits -> scan parallelism even on few large files
         # (payloads are fat rows; 32m keeps per-task memory bounded too)
-        .config("spark.sql.files.maxPartitionBytes", max_partition_bytes)
+        .config("spark.sql.files.maxPartitionBytes", "32m")
         # NOTE: effective only for python-launched local sessions; under
         # spark-submit the driver JVM heap is fixed at submit time — pass
         # --driver-memory there (review finding)
@@ -63,11 +58,8 @@ def _warm_python_workers(spark: SparkSession) -> None:
     a parallel first query is a whole wave of cold workers charged to that
     query's wall (r6: the first headline query measured ~3 s of pure
     worker-spawn).  Warming at session creation moves that one-time cost
-    where it belongs: session startup.  Opt out with
-    ``spark.open_parse.warmPythonWorkers=false``."""
+    where it belongs: session startup."""
     try:
-        if spark.conf.get("spark.open_parse.warmPythonWorkers", "true") != "true":
-            return
         master = spark.conf.get("spark.master", "")
         if not master.startswith("local"):
             return  # cluster executors warm once and stay up anyway

@@ -6,10 +6,10 @@ are the streaming twins of batch operators in this repo, sharing the same
 parse/aggregation code:
 
 - ``streaming_parse``: file-source ``readStream`` over the transcripts table
-  -> the same ``mapInPandas`` parse as batch (mapInPandas is supported on
-  streaming DataFrames; the job is stateless, so exactly-once comes from the
-  source offsets + sink commit log, complementing the batch checkpoint
-  table).
+  -> ``parse_transcripts``, the batch parse itself (mapInPandas is supported
+  on streaming DataFrames, and the under-split rule passes a stream through
+  untouched; the job is stateless, so exactly-once comes from the source
+  offsets + sink commit log, complementing the batch checkpoint table).
 - ``streaming_events_hourly``: watermarked tumbling-window aggregation over
   the events table — the streaming twin of ``q_events_hourly``.
 """
@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from open_parse_spark.spark.pipeline import NODE_SCHEMA, _node_rows
+from open_parse_spark.spark.pipeline import parse_transcripts
 
 TRANSCRIPT_DDL = (
     "conv_id string, turn_idx int, role string, text string, tool string, "
@@ -37,8 +37,7 @@ def streaming_parse(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_dir)
     )
-    pruned = stream.select("conv_id", "turn_idx", "text", "tool")
-    return pruned.mapInPandas(_node_rows(), schema=NODE_SCHEMA)
+    return parse_transcripts(stream)
 
 
 def streaming_events_hourly(

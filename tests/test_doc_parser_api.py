@@ -132,9 +132,9 @@ def test_parse_table_custom_pipeline_emits_error_rows(spark):
 
 
 def test_parse_table_custom_branch_equals_parse_transcripts(spark):
-    """A pipeline whose transforms equal the stock list but are not the same
-    objects takes parse_table's custom branch; its full node relation,
-    nested bbox/elements included, equals parse_transcripts'."""
+    """A pipeline built from fresh stock transforms gives the same node
+    relation as parse_transcripts, nested bbox/elements included, in full
+    and under a narrow output_columns."""
     import pandas as pd
 
     from open_parse_spark.core.transforms import basic_pipeline_transforms
@@ -143,16 +143,66 @@ def test_parse_table_custom_branch_equals_parse_transcripts(spark):
 
     pipeline = BasicIngestionPipeline()
     pipeline.transformations = basic_pipeline_transforms()
-    # some stock transforms are plain functions (shared), the configured
-    # ones are fresh closures, so parse_table takes the custom branch
-    assert not all(
-        a is b for a, b in zip(pipeline.transformations, pipeline._stock_transforms)
-    )
     df = spark.createDataFrame(gen_transcripts(n_convs=12, avg_turns=5, seed=5))
-    custom = DocumentParser(pipeline).parse_table(df)
-    stock = parse_transcripts(df, repartition_for_skew=False)
-    assert custom.schema == stock.schema
     key = ["conv_id", "turn_idx", "node_idx"]
-    got = custom.orderBy(*key).toPandas()
-    assert len(got) > 0
-    pd.testing.assert_frame_equal(got, stock.orderBy(*key).toPandas())
+    for cols in (None, key + ["text", "elements"]):
+        opts = {} if cols is None else {"output_columns": cols}
+        custom = DocumentParser(pipeline).parse_table(df, **opts)
+        stock = parse_transcripts(df, repartition_for_skew=False, **opts)
+        assert custom.schema == stock.schema
+        got = custom.orderBy(*key).toPandas()
+        assert len(got) > 0
+        pd.testing.assert_frame_equal(got, stock.orderBy(*key).toPandas())
+
+
+def test_parse_table_custom_pipeline_takes_parse_options(spark):
+    """A custom pipeline runs through parse_transcripts: on under-split input
+    it takes the one hash exchange on the turn key, and it accepts
+    output_columns."""
+    import re
+
+    from open_parse_spark.data.synth import gen_transcripts
+
+    pipeline = BasicIngestionPipeline()
+    pipeline.append_transform(lambda nodes: nodes)
+    parser = DocumentParser(pipeline)
+    df = spark.createDataFrame(gen_transcripts(n_convs=12, avg_turns=5, seed=5)).coalesce(1)
+
+    plan = parser.parse_table(df)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    assert re.search(r"Exchange hashpartitioning\(conv_id#\w+, turn_idx#\w+, ", plan), plan
+
+    cols = ["conv_id", "turn_idx", "node_idx", "text"]
+    narrow = parser.parse_table(df, output_columns=cols)
+    assert narrow.columns == cols
+    assert narrow.count() > 0
+
+
+def test_parse_table_noop_pipeline_equals_local_parse(spark):
+    """An empty transform list means no transforms, not the stock pipeline:
+    the distributed NoOp parse gives the local NoOp parse's nodes per turn."""
+    import pandas as pd
+
+    parser = DocumentParser(NoOpIngestionPipeline())
+    texts = [_payload(), "plain prose " * 100]
+    pdf = pd.DataFrame(
+        {
+            "conv_id": ["c1", "c1"],
+            "turn_idx": pd.array([0, 1], dtype="int32"),
+            "role": ["user", "assistant"],
+            "text": texts,
+            "tool": ["", ""],
+            "ts": pd.to_datetime(["2020-01-01", "2020-01-01"]),
+        }
+    )
+    out = (
+        parser.parse_table(spark.createDataFrame(pdf))
+        .orderBy("turn_idx", "node_idx")
+        .toPandas()
+    )
+    for turn_idx, text in enumerate(texts):
+        local = [n.text for n in parser.parse(text, "").nodes]
+        assert out[out.turn_idx == turn_idx]["text"].tolist() == local
+    # the raw payload keeps its heading and body as two nodes; the stock
+    # pipeline would merge them
+    assert len(out[out.turn_idx == 0]) == 2

@@ -84,6 +84,42 @@ def test_resume_after_midwave_crash(spark, tmp_path):
     pd.testing.assert_frame_equal(resumed, clean)
 
 
+def test_corrupt_checkpoint_fails_loudly(spark, tmp_path, monkeypatch):
+    """A checkpoint file that cannot be read makes resume raise before any
+    bucket runs, instead of reading as "no bucket done" and re-parsing (and
+    re-checkpointing) every bucket."""
+    import glob
+    import os
+
+    import pytest
+
+    from open_parse_spark.data.synth import gen_transcripts
+    from open_parse_spark.spark import checkpoint
+    from open_parse_spark.spark.checkpoint import run_resumable
+
+    df = spark.createDataFrame(gen_transcripts(n_convs=12, avg_turns=3, seed=4))
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    run_resumable(spark, df, out, ckpt, n_buckets=4, buckets_per_wave=2)
+
+    part = sorted(glob.glob(os.path.join(ckpt, "part-*.parquet")))[0]
+    with open(part, "rb") as f:
+        head = f.read(64)
+    with open(part, "wb") as f:
+        f.write(head)
+
+    parsed = []
+    real_parse = checkpoint.parse_transcripts
+
+    def spy(*args, **kwargs):
+        parsed.append(1)
+        return real_parse(*args, **kwargs)
+
+    monkeypatch.setattr(checkpoint, "parse_transcripts", spy)
+    with pytest.raises(Exception):
+        run_resumable(spark, df, out, ckpt, n_buckets=4, buckets_per_wave=2)
+    assert parsed == []
+
+
 def test_element_heavy_turn_parses_in_linear_time():
     """A 30k-paragraph HTML turn must stay near-linear through the greedy
     pipeline (the page-indexed spatial merge; a whole-list scan regression

@@ -1,21 +1,31 @@
+"""Profile one registry query's jobs and stages from the Spark REST API.
+
+    python tools/profile_query.py <query_name>
+
+Profiles the checkout this file is in (driver and python workers), on
+``local[$SPARK_GRAFT_CPUS]`` (default: every core) with 2 x cores shuffle
+partitions, over ``$SPARK_GRAFT_SF_DIR``.
+"""
 import json, os, sys, time, urllib.request
-sys.path.insert(0, "/root/repo")
+root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, root)
+# the workers inherit PYTHONPATH, not sys.path
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [root, os.environ.get("PYTHONPATH")]))
 from open_parse_spark.spark.session import get_spark
 
 name = sys.argv[1]
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-spark = get_spark(app_name="prof", master="local[32]", shuffle_partitions=64)
+cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+spark = get_spark(app_name="prof", master=f"local[{cores}]", shuffle_partitions=2 * cores)
 from open_parse_spark.plans.queries import REGISTRY
 fn, _ = REGISTRY[name]
-# warm
-spark.range(128, numPartitions=128).mapInPandas(lambda it: it, "id long").write.format("noop").mode("overwrite").save()
 t0 = time.monotonic()
 fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
 wall = time.monotonic() - t0
 ui = spark.sparkContext.uiWebUrl
 app = spark.sparkContext.applicationId
 jobs = json.load(urllib.request.urlopen(f"{ui}/api/v1/applications/{app}/jobs"))
-jobs = [j for j in jobs if j["jobId"] > 0]  # skip warmup job 0
+jobs = [j for j in jobs if j["jobId"] > 0]  # skip get_spark's worker warmup job 0
 print(f"=== {name}: wall {wall:.2f}s, {len(jobs)} jobs ===")
 for j in sorted(jobs, key=lambda j: j["jobId"]):
     t = (time.strptime(j["completionTime"][:19], "%Y-%m-%dT%H:%M:%S"), )
