@@ -13,7 +13,9 @@ Design (SURVEY §3.4, §4.2 "Exactly-once resume"):
   job).  Each wave writes its output under ``out/bucket=K/`` directories
   (idempotent per-bucket overwrite) and only then appends one lineage row per
   bucket to the checkpoint table: ``(bucket, input_rows, output_nodes,
-  parse_errors, wall_ms, checksum)``.
+  parse_errors, wall_ms, checksum)``.  The lineage is observed on the wave's
+  one write (``Observation``s on its input and its node rows), which is exact
+  because that write is a single result stage with no exchange.
 - on restart, completed buckets are read from the checkpoint table and
   anti-joined away; a wave that died mid-write is simply re-run — its
   partial ``bucket=K`` dirs are overwritten before its checkpoint rows ever
@@ -35,7 +37,7 @@ import time
 from dataclasses import dataclass
 from typing import List, Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from open_parse_spark.spark.pipeline import parse_transcripts
 
@@ -53,8 +55,6 @@ def bucket_expr(n_buckets: int):
 class ResumableResult:
     processed_buckets: List[int]
     skipped_buckets: List[int]
-    out_path: str
-    checkpoint_path: str
 
 
 def _completed_buckets(
@@ -84,18 +84,17 @@ def _completed_buckets(
     return {r["bucket"] for r in rows}
 
 
-def _row_checksum(nodes: DataFrame) -> DataFrame:
-    """Order-insensitive content checksum per bucket."""
-    return nodes.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("rows_total"),
-        F.sum(F.when(F.col("node_idx") >= 0, 1).otherwise(0)).alias("output_nodes"),
-        F.sum(F.when(F.col("node_idx") < 0, 1).otherwise(0)).alias("parse_errors"),
-        F.bit_xor(
-            F.xxhash64(
-                F.col("conv_id"), F.col("turn_idx"), F.col("node_idx"), F.col("text")
-            )
-        ).alias("checksum"),
-    )
+def _per_bucket(wave: List[int], **metrics) -> list:
+    """One observed metric ``<name>_<b>`` per bucket ``b`` of the wave for
+    each ``name=(agg, col)``: ``agg`` of ``col`` over that bucket's rows, 0
+    when the bucket has none."""
+    return [
+        F.coalesce(agg(F.when(F.col("bucket") == b, col)), F.lit(0)).alias(
+            f"{name}_{b}"
+        )
+        for b in wave
+        for name, (agg, col) in metrics.items()
+    ]
 
 
 def run_resumable(
@@ -113,36 +112,48 @@ def run_resumable(
     ``max_waves`` lets tests simulate a mid-job kill: stop after k waves,
     call again to resume.  Each wave parses with
     ``repartition_for_skew=False``, a pure map: the under-split probe would
-    add a partition-count job to every wave.
+    add a partition-count job to every wave, and its exchange would make the
+    observed lineage inexact.  A checkpoint row's ``wall_ms`` times the
+    wave's parse write alone (it once also held a separate input count job).
     """
     done = _completed_buckets(spark, checkpoint_path, n_buckets)
     pending = [b for b in range(n_buckets) if b not in done]
+    waves = [
+        pending[i : i + buckets_per_wave]
+        for i in range(0, len(pending), buckets_per_wave)
+    ]
     processed: List[int] = []
-
-    wave_no = 0
-    while pending:
-        if max_waves is not None and wave_no >= max_waves:
-            break
-        wave = pending[:buckets_per_wave]
-        pending = pending[buckets_per_wave:]
-        wave_no += 1
-
-        t0 = time.monotonic()
-        wave_input = transcripts.withColumn("bucket", bucket_expr(n_buckets)).where(
-            F.col("bucket").isin(wave)
+    for wave in waves[:max_waves]:
+        # Lineage is observed on the wave's one write, not computed by extra
+        # jobs.  Exact only while that write is a single result stage (no
+        # exchange, hence repartition_for_skew=False): Spark applies a result
+        # task's accumulator updates once per partition, so a retried task
+        # neither double counts nor XOR-cancels the checksum.
+        seen_in, seen_out = Observation(), Observation()
+        wave_input = (
+            transcripts.withColumn("bucket", bucket_expr(n_buckets))
+            .where(F.col("bucket").isin(wave))
+            .observe(seen_in, *_per_bucket(wave, input_rows=(F.count, F.lit(1))))
         )
-        input_rows_by_bucket = {
-            r["bucket"]: r["cnt"]
-            for r in wave_input.groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        }
-
-        nodes = parse_transcripts(
-            wave_input.drop("bucket"), repartition_for_skew=False
-        ).withColumn("bucket", bucket_expr(n_buckets))
+        nodes = (
+            parse_transcripts(wave_input.drop("bucket"), repartition_for_skew=False)
+            .withColumn("bucket", bucket_expr(n_buckets))
+            .observe(
+                seen_out,
+                *_per_bucket(
+                    wave,
+                    output_nodes=(F.sum, (F.col("node_idx") >= 0).cast("long")),
+                    parse_errors=(F.sum, (F.col("node_idx") < 0).cast("long")),
+                    checksum=(
+                        F.bit_xor,
+                        F.xxhash64("conv_id", "turn_idx", "node_idx", "text"),
+                    ),
+                ),
+            )
+        )
 
         # idempotent per-bucket overwrite: output first ...
+        t0 = time.monotonic()
         (
             nodes.write.mode("overwrite")
             .partitionBy("bucket")
@@ -151,58 +162,17 @@ def run_resumable(
         )
         wall_ms = int((time.monotonic() - t0) * 1000)
 
-        # ... checkpoint rows strictly after (write-ahead ordering).
-        # schema-pinned read: an all-empty wave leaves only _SUCCESS in
-        # out_path and a bare parquet read would fail schema inference,
-        # wedging resume permanently (review finding)
-        stats = (
-            spark.read.schema(nodes.schema)
-            .parquet(out_path)
-            .where(F.col("bucket").isin(wave))
-        )
-        lineage = (
-            _row_checksum(stats)
-            .withColumn("wall_ms", F.lit(wall_ms))
-            .withColumn("run_id", F.lit(run_id))
-        )
-        lineage_rows = lineage.collect()
-        lineage_pdf = spark.createDataFrame(
-            [
-                (
-                    r["bucket"],
-                    int(input_rows_by_bucket.get(r["bucket"], 0)),
-                    r["output_nodes"],
-                    r["parse_errors"],
-                    r["wall_ms"],
-                    r["checksum"],
-                    r["run_id"],
-                    n_buckets,
-                )
-                for r in lineage_rows
-            ]
-            + [
-                # buckets that produced zero nodes still need a lineage row
-                (
-                    b,
-                    int(input_rows_by_bucket.get(b, 0)),
-                    0,
-                    0,
-                    wall_ms,
-                    0,
-                    run_id,
-                    n_buckets,
-                )
-                for b in wave
-                if b not in {r["bucket"] for r in lineage_rows}
-            ],
-            schema=CHECKPOINT_SCHEMA,
-        )
-        lineage_pdf.write.mode("append").parquet(checkpoint_path)
+        # ... checkpoint rows strictly after (write-ahead ordering)
+        got = {**seen_in.get, **seen_out.get}
+        rows = [
+            (b, got[f"input_rows_{b}"], got[f"output_nodes_{b}"],
+             got[f"parse_errors_{b}"], wall_ms, got[f"checksum_{b}"],
+             run_id, n_buckets)
+            for b in wave
+        ]
+        spark.createDataFrame(rows, schema=CHECKPOINT_SCHEMA).write.mode(
+            "append"
+        ).parquet(checkpoint_path)
         processed.extend(wave)
 
-    return ResumableResult(
-        processed_buckets=processed,
-        skipped_buckets=sorted(done),
-        out_path=out_path,
-        checkpoint_path=checkpoint_path,
-    )
+    return ResumableResult(processed_buckets=processed, skipped_buckets=sorted(done))

@@ -58,29 +58,35 @@ def _warm_python_workers(spark: SparkSession) -> None:
     a parallel first query is a whole wave of cold workers charged to that
     query's wall (r6: the first headline query measured ~3 s of pure
     worker-spawn).  Warming at session creation moves that one-time cost
-    where it belongs: session startup."""
+    where it belongs: session startup.
+
+    On a local master a failed warm-up (most often: the workers cannot
+    import ``open_parse_spark``) raises ``RuntimeError`` chained to the
+    worker's error, and the session is not marked warmed."""
+    master = spark.conf.get("spark.master", "")
+    if not master.startswith("local"):
+        return  # cluster executors warm once and stay up anyway
+    key = spark.sparkContext.applicationId
+    if key in _WARMED:
+        return
+    cores = spark.sparkContext.defaultParallelism
+
+    def _touch(batches):
+        import numpy  # noqa: F401
+        import pandas as pd
+
+        from open_parse_spark.core import parse  # noqa: F401
+
+        for b in batches:
+            yield pd.DataFrame({"n": [len(b)]})
+
     try:
-        master = spark.conf.get("spark.master", "")
-        if not master.startswith("local"):
-            return  # cluster executors warm once and stay up anyway
-        key = spark.sparkContext.applicationId
-        if key in _WARMED:
-            return
-        _WARMED.add(key)
-        cores = spark.sparkContext.defaultParallelism
-
-        def _touch(batches):
-            import numpy  # noqa: F401
-            import pandas as pd
-
-            from open_parse_spark.core import parse  # noqa: F401
-
-            for b in batches:
-                yield pd.DataFrame({"n": [len(b)]})
-
         spark.range(2 * cores, numPartitions=2 * cores).mapInPandas(
             _touch, "n long"
         ).write.format("noop").mode("overwrite").save()
-    except Exception:
-        # warming is best-effort: never fail session creation over it
-        pass
+    except Exception as exc:
+        raise RuntimeError(
+            "python worker warm-up failed: the workers must import open_parse_spark "
+            f"from their PYTHONPATH ({os.environ.get('PYTHONPATH')!r}) or --py-files"
+        ) from exc
+    _WARMED.add(key)

@@ -431,7 +431,6 @@ def streaming_rag_index(
     window: int = 128,
     overlap: int = 32,
     max_files_per_trigger: int | None = None,
-    available_now: bool = True,
 ):
     """Incremental RAG index build: each micro-batch of documents runs the
     SAME chunk->embed->LSH-bucket body as the batch query (``foreachBatch``
@@ -445,7 +444,7 @@ def streaming_rag_index(
     one atomic commit instead.  NOTE: on read-back, partition-column type
     inference yields int32 for epoch/bucket (the data wrote them as long);
     cast or read with an explicit schema where parity matters.
-    Returns the started StreamingQuery."""
+    Returns the started ``availableNow`` StreamingQuery."""
     from open_parse_spark.operators.chunking import rag_index_table
 
     reader = spark.readStream.schema(DOCUMENT_DDL)
@@ -463,13 +462,12 @@ def streaming_rag_index(
             .parquet(output_path)
         )
 
-    writer = (
+    return (
         docs.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_bloom_decontaminate(
@@ -567,7 +565,6 @@ def streaming_bm25_postings(
     output_path: str,
     checkpoint_path: str,
     max_files_per_trigger: int | None = None,
-    available_now: bool = True,
 ):
     """Incremental lexical-index maintenance: each micro-batch of documents
     emits its own docs' (doc_id, term, tf) postings and (doc_id, dl) doc
@@ -582,7 +579,7 @@ def streaming_bm25_postings(
     (As with rag_index, that guards checkpoint-resume replays, which keep
     epoch numbering; a FRESH-checkpoint rebuild restarts epochs and can
     batch differently, so point rebuilds at a fresh output dir.)
-    Returns the started StreamingQuery."""
+    Returns the started ``availableNow`` StreamingQuery."""
     from open_parse_spark.operators.search import doc_postings
 
     reader = spark.readStream.schema(DOCUMENT_DDL)
@@ -601,13 +598,12 @@ def streaming_bm25_postings(
                 .parquet(f"{output_path}/{sub}")
             )
 
-    writer = (
+    return (
         docs.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def serve_bm25_from_dir(spark: SparkSession, index_path: str, k: int = 5) -> DataFrame:

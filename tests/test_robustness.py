@@ -1,9 +1,13 @@
 """Robustness: pathological payloads and mid-wave crash recovery."""
 
 import json
+import os
+import subprocess
+import sys
 import time
 
 import pandas as pd
+import pytest
 
 
 def test_giant_single_turn_parses_bounded():
@@ -118,6 +122,35 @@ def test_corrupt_checkpoint_fails_loudly(spark, tmp_path, monkeypatch):
     with pytest.raises(Exception):
         run_resumable(spark, df, out, ckpt, n_buckets=4, buckets_per_wave=2)
     assert parsed == []
+
+
+@pytest.mark.slow
+def test_worker_warmup_failure_fails_loudly(tmp_path):
+    """A session whose python workers cannot import open_parse_spark fails in
+    get_spark, instead of handing back a session whose every Arrow stage
+    dies.  The checkout is only on the driver's sys.path: PYTHONPATH is
+    unset and the workers start in an empty directory."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from open_parse_spark.spark.session import get_spark\n"
+        "get_spark(app_name='warmup-probe', master='local[1]')\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["PYSPARK_PYTHON"] = sys.executable
+    env["SPARK_DRIVER_MEM"] = "512m"
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode != 0, proc.stderr[-2000:]
+    assert "python worker warm-up failed" in proc.stderr, proc.stderr[-2000:]
+    assert "open_parse_spark" in proc.stderr
 
 
 def test_element_heavy_turn_parses_in_linear_time():

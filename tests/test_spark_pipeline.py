@@ -358,3 +358,76 @@ def test_all_empty_turn_batches(spark, tmp_path):
         buckets_per_wave=2,
     )
     assert sorted(r.processed_buckets) == [0, 1, 2, 3]
+
+
+def test_resume_lineage_equals_output(spark, tmp_path):
+    """Each checkpoint row, observed on its wave's write, equals what a
+    re-read of that bucket's output says; a bucket with no conversation gets
+    a row of zeros."""
+    from pyspark.sql import functions as F
+
+    from open_parse_spark.spark.checkpoint import bucket_expr, run_resumable
+
+    n_buckets = 16
+    pdf = gen_transcripts(n_convs=8, avg_turns=4, seed=3)
+    # a non-dict payload root makes error rows, so parse_errors is not 0
+    bad = pdf.head(2).assign(conv_id="bad", turn_idx=[0, 1], text='{"pages": 42}')
+    df = spark.createDataFrame(pd.concat([pdf, bad], ignore_index=True))
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    run_resumable(spark, df, out, ckpt, n_buckets=n_buckets, buckets_per_wave=8)
+
+    inputs = {
+        r["b"]: r["count"]
+        for r in df.groupBy(bucket_expr(n_buckets).alias("b")).count().collect()
+    }
+    assert len(inputs) < n_buckets, "every bucket got a conversation"
+    written = {
+        r["bucket"]: (r["output_nodes"], r["parse_errors"], r["checksum"])
+        for r in spark.read.parquet(out)
+        .groupBy("bucket")
+        .agg(
+            F.sum((F.col("node_idx") >= 0).cast("long")).alias("output_nodes"),
+            F.sum((F.col("node_idx") < 0).cast("long")).alias("parse_errors"),
+            F.bit_xor(
+                F.xxhash64("conv_id", "turn_idx", "node_idx", "text")
+            ).alias("checksum"),
+        )
+        .collect()
+    }
+    ck = spark.read.parquet(ckpt).toPandas()
+    assert sorted(ck["bucket"]) == list(range(n_buckets))
+    for row in ck.itertuples():
+        assert row.input_rows == inputs.get(row.bucket, 0), row
+        assert (row.output_nodes, row.parse_errors, row.checksum) == written.get(
+            row.bucket, (0, 0, 0)
+        ), row
+    assert ck["parse_errors"].sum() > 0
+
+
+def test_resume_wave_is_one_pass(spark, transcripts_pdf, tmp_path):
+    """A fresh wave submits one single-stage parse write and one single-stage
+    checkpoint append: its lineage needs no count job, no re-read of the
+    output and no fill-in for empty buckets."""
+    from open_parse_spark.spark.checkpoint import run_resumable
+
+    sc = spark.sparkContext
+    group = f"one-pass-{tmp_path.name}"
+    sc.setJobGroup(group, "run_resumable one-pass probe")
+    try:
+        res = run_resumable(
+            spark,
+            spark.createDataFrame(transcripts_pdf),
+            str(tmp_path / "out"),
+            str(tmp_path / "ckpt"),
+            n_buckets=4,
+            buckets_per_wave=2,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert res.processed_buckets == [0, 1, 2, 3]
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = {j: len(tracker.getJobInfo(j).stageIds) for j in jobs}
+    assert 0 < len(jobs) <= 2 * 2, stages
+    assert set(stages.values()) == {1}, stages

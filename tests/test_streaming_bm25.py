@@ -33,9 +33,7 @@ def test_stream_built_index_equals_batch(spark, tmp_path):
             """
         )
 
-    q = streaming_bm25_postings(
-        spark, src, out, ckpt, max_files_per_trigger=1, available_now=True
-    )
+    q = streaming_bm25_postings(spark, src, out, ckpt, max_files_per_trigger=1)
     q.awaitTermination(120)
 
     served = sorted(map(tuple, serve_bm25_from_dir(spark, out).collect()))
@@ -67,9 +65,7 @@ def test_restarted_stream_is_idempotent(spark, tmp_path):
         """
     )
     for attempt in range(2):
-        q = streaming_bm25_postings(
-            spark, src, out, str(tmp_path / f"ckpt{attempt}"), available_now=True
-        )
+        q = streaming_bm25_postings(spark, src, out, str(tmp_path / f"ckpt{attempt}"))
         q.awaitTermination(120)
 
     tf = spark.read.parquet(f"{out}/postings")
@@ -101,9 +97,7 @@ def test_recrawled_doc_serves_latest_version_only(spark, tmp_path):
         """
     )
 
-    q = streaming_bm25_postings(
-        spark, src, out, ckpt, max_files_per_trigger=1, available_now=True
-    )
+    q = streaming_bm25_postings(spark, src, out, ckpt, max_files_per_trigger=1)
     q.awaitTermination(120)
 
     # the raw index really does hold both versions (the hazard is present)
