@@ -32,11 +32,12 @@ fully written (write-ahead ordering: output first, checkpoint last).
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass
 from typing import List, Optional
 
+import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from open_parse_spark.spark.pipeline import parse_transcripts
@@ -60,18 +61,18 @@ class ResumableResult:
 def _completed_buckets(
     spark: SparkSession, checkpoint_path: str, n_buckets: int
 ) -> set:
-    if not os.path.exists(checkpoint_path):
-        return set()
     # schema-pinned, one job: an unreadable checkpoint raises instead of
     # looking empty (which would re-parse every bucket), and a checkpoint
-    # written before n_buckets was recorded reads it as null
-    rows = (
-        spark.read.schema(CHECKPOINT_SCHEMA)
-        .parquet(checkpoint_path)
-        .select("bucket", "n_buckets")
-        .distinct()
-        .collect()
-    )
+    # written before n_buckets was recorded reads it as null.  Only a path
+    # that does not exist (through its own file system, so URIs count too)
+    # means "no bucket done".
+    try:
+        ck = spark.read.schema(CHECKPOINT_SCHEMA).parquet(checkpoint_path)
+    except AnalysisException as exc:
+        if exc.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return set()
+    rows = ck.select("bucket", "n_buckets").distinct().collect()
     bad = {r["n_buckets"] for r in rows} - {n_buckets, None}
     if bad:
         # resuming with a different bucket count would re-parse
@@ -82,6 +83,14 @@ def _completed_buckets(
             f"n_buckets={sorted(bad)}, resume requested n_buckets={n_buckets}"
         )
     return {r["bucket"] for r in rows}
+
+
+def _checkpoint_rows(spark: SparkSession, rows: list) -> DataFrame:
+    """``rows`` (tuples in ``CHECKPOINT_SCHEMA`` order) as a one-partition
+    frame over a JVM local relation, so their append is one JVM task writing
+    one file.  A plain-list ``createDataFrame`` would scan a parallelized
+    Python RDD instead: python tasks and a file per slice."""
+    return spark.createDataFrame(pd.DataFrame(rows), schema=CHECKPOINT_SCHEMA).coalesce(1)
 
 
 def _per_bucket(wave: List[int], **metrics) -> list:
@@ -170,9 +179,7 @@ def run_resumable(
              run_id, n_buckets)
             for b in wave
         ]
-        spark.createDataFrame(rows, schema=CHECKPOINT_SCHEMA).write.mode(
-            "append"
-        ).parquet(checkpoint_path)
+        _checkpoint_rows(spark, rows).write.mode("append").parquet(checkpoint_path)
         processed.extend(wave)
 
     return ResumableResult(processed_buckets=processed, skipped_buckets=sorted(done))

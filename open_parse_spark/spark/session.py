@@ -14,10 +14,23 @@ def get_spark(
 ) -> SparkSession:
     """Arrow enabled, small Arrow batches (megabyte payloads must not blow up
     executor memory: FIXTURES payloads are log-normal with a heavy tail), AQE
-    on for runtime skew handling on top of our explicit repartitioning."""
+    on for runtime skew handling on top of our explicit repartitioning.
+
+    When the python daemon can import this package at launch (a local
+    master, and the package is loaded from the driver's cwd or from a
+    directory on ``PYTHONPATH``, both of which the JVM and its daemon
+    inherit), ``spark.python.daemon.module`` is
+    set to ``open_parse_spark.spark.daemon``, so workers import pyspark from
+    its installed package rather than from Spark's zip and jar archives
+    (see that module).  Otherwise, e.g. under ``spark-submit --py-files``,
+    which ships the package to workers only per task, pyspark's stock
+    daemon stays."""
     master = master or os.environ.get("SPARK_MASTER", "local[*]")
+    builder = SparkSession.builder
+    if _daemon_can_import_package(master):
+        builder = builder.config("spark.python.daemon.module", "open_parse_spark.spark.daemon")
     spark = (
-        SparkSession.builder.appName(app_name)
+        builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -41,6 +54,22 @@ def get_spark(
     )
     _warm_python_workers(spark)
     return spark
+
+
+def _daemon_can_import_package(master: str) -> bool:
+    """True on a local master (executors in this driver's JVM) when this
+    package is loaded from a directory that is the cwd or on
+    ``PYTHONPATH``: the places a daemon started by ``python -m`` from that
+    JVM looks first."""
+    import open_parse_spark
+
+    if not (master == "local" or master.startswith("local[")):
+        return False
+    root = os.path.dirname(os.path.dirname(os.path.abspath(open_parse_spark.__file__)))
+    launch_dirs = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    return os.path.isdir(root) and any(
+        d and os.path.realpath(d) == os.path.realpath(root) for d in launch_dirs
+    )
 
 
 # sessions whose python workers were already warmed (getOrCreate can hand the

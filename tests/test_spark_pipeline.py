@@ -431,3 +431,43 @@ def test_resume_wave_is_one_pass(spark, transcripts_pdf, tmp_path):
     stages = {j: len(tracker.getJobInfo(j).stageIds) for j in jobs}
     assert 0 < len(jobs) <= 2 * 2, stages
     assert set(stages.values()) == {1}, stages
+
+
+def test_checkpoint_append_is_one_jvm_task(spark, transcripts_pdf, tmp_path):
+    """A wave's lineage rows are a JVM local relation: their append plans no
+    scan of a Python RDD and no Python node, and each wave adds exactly one
+    checkpoint file."""
+    import glob
+
+    from open_parse_spark.spark.checkpoint import _checkpoint_rows, run_resumable
+
+    rows = [(0, 3, 5, 0, 12, -7, "r", 4), (1, 0, 0, 0, 12, 0, "r", 4)]
+    ck = _checkpoint_rows(spark, rows)
+    plan = ck._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan and "Python" not in plan, plan
+    assert "LocalTableScan" in plan, plan
+    assert [tuple(r) for r in ck.collect()] == rows
+
+    ckpt = str(tmp_path / "ckpt")
+    df = spark.createDataFrame(transcripts_pdf)
+    for waves in (1, 2):
+        run_resumable(
+            spark, df, str(tmp_path / "out"), ckpt, n_buckets=6,
+            buckets_per_wave=2, max_waves=1,
+        )
+        assert len(glob.glob(f"{ckpt}/part-*.parquet")) == waves
+
+
+def test_resume_with_uri_paths(spark, transcripts_pdf, tmp_path):
+    """``file://`` output and checkpoint paths resume like plain ones: the
+    second run finds every bucket done and appends no lineage row."""
+    from open_parse_spark.spark.checkpoint import run_resumable
+
+    df = spark.createDataFrame(transcripts_pdf)
+    out, ckpt = (tmp_path / "out").as_uri(), (tmp_path / "ckpt").as_uri()
+    first = run_resumable(spark, df, out, ckpt, n_buckets=4, buckets_per_wave=2)
+    second = run_resumable(spark, df, out, ckpt, n_buckets=4, buckets_per_wave=2)
+    assert first.processed_buckets == [0, 1, 2, 3]
+    assert second.processed_buckets == [] and second.skipped_buckets == [0, 1, 2, 3]
+    counts = spark.read.parquet(ckpt).groupBy("bucket").count().collect()
+    assert sorted((r["bucket"], r["count"]) for r in counts) == [(b, 1) for b in range(4)]

@@ -8,7 +8,9 @@ partitions, over ``$SPARK_GRAFT_SF_DIR``.  Each query builds and runs once
 into a noop sink under ``setJobGroup(<name>)``, so its wall, job list and
 stage list hold that query's work only.  ``--explain DIR`` also writes
 ``DIR/<name>.txt`` with the query's formatted plan and prints the plan's
-``Exchange`` count.
+``Exchange`` count.  It first prints the session's python daemon module
+(``spark.python.daemon.module``, or ``pyspark.daemon`` when unset), which
+decides how each python task starts.
 """
 import argparse, json, os, sys, time, urllib.request
 from datetime import datetime
@@ -28,6 +30,7 @@ cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 spark = get_spark(app_name="prof", master=f"local[{cores}]", shuffle_partitions=2 * cores)
 from open_parse_spark.plans.queries import REGISTRY
 sc = spark.sparkContext
+print(f"python daemon: {spark.conf.get('spark.python.daemon.module', None) or 'pyspark.daemon'}")
 api = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
 
 
