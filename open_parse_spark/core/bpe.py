@@ -116,10 +116,13 @@ class BpeCounter:
 
 def find_default_vocab() -> Optional[str]:
     """$OPEN_PARSE_BPE_PATH if set, else the first ``*.tiktoken``/``*.gz``
-    file in the vendor dir."""
+    file in the vendor dir.  A configured path that does not exist raises:
+    falling back would silently change every token count."""
     p = os.environ.get(ENV_VAR)
     if p:
-        return p if os.path.exists(p) else None
+        if not os.path.exists(p):
+            raise ValueError(f"${ENV_VAR} names a missing BPE vocabulary: {p}")
+        return p
     if os.path.isdir(VENDOR_DIR):
         for name in sorted(os.listdir(VENDOR_DIR)):
             if name.endswith((".tiktoken", ".tiktoken.gz")):
@@ -128,13 +131,14 @@ def find_default_vocab() -> Optional[str]:
 
 
 def load_default() -> Optional[BpeCounter]:
-    """The vendored counter when a vocabulary file is present, else None.
-    Never raises: a malformed vendor file must not take down the pipeline
-    import; it falls through to the regex approximation instead."""
+    """The vendored counter when a vocabulary file is present, else None
+    (the regex approximation).  A vocabulary that is present but cannot be
+    read raises ``ValueError`` naming the file.  ``core/tokens.py`` calls
+    this on the first count, not at import."""
     path = find_default_vocab()
     if path is None:
         return None
     try:
         return BpeCounter(load_ranks(path))
-    except Exception:
-        return None
+    except (OSError, ValueError) as e:
+        raise ValueError(f"cannot load BPE vocabulary {path}: {e}") from e

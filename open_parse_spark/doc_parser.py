@@ -21,7 +21,7 @@ from dataclasses import dataclass, field
 from typing import Callable, List, Optional
 
 from open_parse_spark.core.model import Node
-from open_parse_spark.core.payload import decode_payload, elements_to_nodes
+from open_parse_spark.core.parse import parse_turn
 from open_parse_spark.core.transforms import (
     Transform,
     basic_pipeline_transforms,
@@ -104,10 +104,9 @@ class DocumentParser:
     def parse(
         self, text: Optional[str], tool: Optional[str] = None, filename: str = ""
     ) -> ParsedDocument:
-        """One document payload -> ParsedDocument (local, eager)."""
-        elements = decode_payload(text, tool)
-        nodes = elements_to_nodes(elements)
-        nodes = self.processing_pipeline.run(nodes)
+        """One document payload -> ParsedDocument (local, eager): the same
+        ``parse_turn`` the distributed parse runs per turn."""
+        nodes = parse_turn(text, tool, self.processing_pipeline.transformations)
         num_pages = (
             max((n.end_page for n in nodes), default=-1) + 1 if nodes else 0
         )

@@ -152,6 +152,10 @@ def _train_books(
     slices differ) — the IVF init convention, unchanged."""
     import numpy as np
 
+    if dim % n_sub:
+        # a remainder would be sliced off every subspace: trailing
+        # components never reach a codebook or a distance
+        raise ValueError(f"dim {dim} not divisible by n_sub {n_sub}")
     sub = dim // n_sub
     c = _quantized(embeddings, id_col, vec_col, scale)
     seed = (
@@ -232,8 +236,6 @@ def pq_codebooks_quantized(
     """
     if dim is None:
         dim = _dim_of(embeddings, vec_col)
-    if dim % n_sub:
-        raise ValueError(f"dim {dim} not divisible by n_sub {n_sub}")
     _books, rows = _train_books(
         embeddings, n_sub, n_codes, iters, id_col, vec_col, scale, dim
     )

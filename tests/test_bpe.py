@@ -187,3 +187,26 @@ def test_tokens_module_prefers_vendored_vocab(tmp_path, monkeypatch):
         importlib.reload(tokens_mod)
         assert tokens_mod.num_tokens("aaaaaaaa") == 2
         assert tokens_mod._BPE is None
+
+
+@pytest.mark.parametrize("content", [None, "not-a-vocab-line\n"])
+def test_configured_vocab_that_cannot_load_raises(tmp_path, monkeypatch, content):
+    """A missing or malformed $OPEN_PARSE_BPE_PATH file raises on the first
+    count, naming the path, instead of falling back to the approximation."""
+    p = str(tmp_path / "bad.tiktoken")
+    if content is not None:
+        with open(p, "w") as f:
+            f.write(content)
+    import open_parse_spark.core.bpe as bpe_mod
+    import open_parse_spark.core.tokens as tokens_mod
+
+    monkeypatch.setenv(bpe_mod.ENV_VAR, p)
+    try:
+        importlib.reload(tokens_mod)
+        with pytest.raises(ValueError, match="bad.tiktoken"):
+            tokens_mod.num_tokens("aaaaaaaa")
+    finally:
+        monkeypatch.delenv(bpe_mod.ENV_VAR)
+        importlib.reload(tokens_mod)
+        assert tokens_mod.num_tokens("aaaaaaaa") == 2
+        assert tokens_mod._BPE is None

@@ -78,7 +78,7 @@ def test_metrics_check_twins_true_and_falsifiable(spark, monkeypatch):
     (VERDICT r3 #6) must (a) hold on real data and (b) actually FLIP when
     the bookkeeping regresses — otherwise the oracle's all-true expectation
     is vacuous."""
-    import open_parse_spark.spark.pipeline as P
+    import open_parse_spark.plans.queries as Q
     from open_parse_spark.plans.queries import (
         q_eval_metrics_check,
         q_parse_metrics_check,
@@ -93,14 +93,15 @@ def test_metrics_check_twins_true_and_falsifiable(spark, monkeypatch):
     assert all(erow[c] for c in erow.asDict())
 
     # regression injection: metrics that over-count nodes by 1 per conv
-    real = P.parse_quality_metrics
+    real = Q.parse_quality_metrics
 
     def broken(nodes):
         from pyspark.sql import functions as F
 
         return real(nodes).withColumn("nodes", F.col("nodes") + 1)
 
-    monkeypatch.setattr(P, "parse_quality_metrics", broken)
+    # patched where the twins look it up (the queries module's import)
+    monkeypatch.setattr(Q, "parse_quality_metrics", broken)
     bad = q_parse_metrics_check(spark, sf).collect()
     n_false = sum(1 for r in bad if not r["counts_consistent"])
     assert n_false > 0, "counts_consistent never flipped under a broken rollup"

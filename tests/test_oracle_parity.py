@@ -8,11 +8,9 @@ import pandas as pd
 import pytest
 
 from open_parse_spark.plans.queries import REGISTRY
+from tools.check_oracles import TABLES, normalize
 
 SF_DIR = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.001")
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 @pytest.fixture(scope="module")
@@ -25,14 +23,6 @@ def con():
     return con
 
 
-def _normalize(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.reindex(sorted(pdf.columns), axis=1)
-    for c in pdf.columns:
-        if pdf[c].dtype == object:
-            pdf[c] = pdf[c].astype(str)
-    return pdf.sort_values(list(pdf.columns), kind="stable").reset_index(drop=True)
-
-
 SQL_CHECKED = [name for name, (_fn, sql) in REGISTRY.items() if sql is not None]
 ROWS_ONLY = [name for name, (_fn, sql) in REGISTRY.items() if sql is None]
 
@@ -40,8 +30,8 @@ ROWS_ONLY = [name for name, (_fn, sql) in REGISTRY.items() if sql is None]
 @pytest.mark.parametrize("name", SQL_CHECKED)
 def test_query_matches_oracle(spark, con, name):
     fn, sql = REGISTRY[name]
-    got = _normalize(fn(spark, SF_DIR).toPandas())
-    want = _normalize(con.execute(sql).df())
+    got = normalize(fn(spark, SF_DIR).toPandas())
+    want = normalize(con.execute(sql).df())
     assert list(got.columns) == list(want.columns)
     assert len(got) == len(want)
     pd.testing.assert_frame_equal(got, want, check_dtype=False)

@@ -133,3 +133,11 @@ def test_pq_rejects_query_dim_mismatch(spark):
     q32 = _emb_df(spark, {0: rng.normal(0, 0.2, 4)})
     with pytest.raises(ValueError, match="query dim"):
         pq_topk_quantized(emb, q32, n_sub=2)
+
+
+def test_pq_topk_rejects_dim_not_divisible_by_n_sub(spark):
+    # with sub = dim // n_sub the trailing components would be ignored
+    rng = np.random.default_rng(9)
+    emb = _emb_df(spark, {i: rng.normal(0, 0.2, 8) for i in range(10)})
+    with pytest.raises(ValueError, match="not divisible"):
+        pq_topk_quantized(emb, emb.where("vec_id < 2"), n_sub=3, n_codes=4)
