@@ -13,18 +13,16 @@ This module is that DOM side, built dependency-free on stdlib
   signal set) prune the subtree.
 - **Link-density pruning** (Kohlschuetter-style): a short flowing block
   whose text is mostly anchor text is navigation, not content.
-- **Structure kept**: h1-h6 become heading blocks (mapped to bold spans
-  sized >= the reference's heading threshold so heading-merge transforms
-  fire), p/div runs become paragraphs, ul/ol become bullet lists, table
-  rows are captured and rendered byte-compatibly with
-  ``functions/tables.py`` renderers.
+- **Structure kept**: h1-h6 become heading blocks with their level, p/div
+  runs become paragraphs (with inline bold/italic runs), ul/ol become
+  bullet lists, table rows are captured as header + row grids.
 
-``extract_main_blocks`` is the pure extraction surface (oracle-checked in
-the registry: content injected into a deterministic chrome template must
-round-trip exactly while every piece of chrome is dropped).
-``html_to_elements`` lays blocks onto the same deterministic synthetic
-pages the prose path uses, so every downstream node transform (reading
-order, spatial merge, stubs, bullets, heading merge) runs unchanged.
+``extract_main_blocks`` is the whole surface (oracle-checked in the
+registry: content injected into a deterministic chrome template must
+round-trip exactly while every piece of chrome is dropped).  It is pure
+extraction: ``core/payload.py`` lays the blocks onto the synthetic pages
+the prose path uses, so every downstream node transform (reading order,
+spatial merge, stubs, bullets, heading merge) runs unchanged.
 
 Scale: pure per-turn Python executed inside the existing Arrow
 ``mapInPandas`` parse stage — zero shuffle, no per-row Python UDF, no new
@@ -57,14 +55,12 @@ _BOILER_TOKENS = frozenset(
     "advertisement banner social share sharing breadcrumb breadcrumbs "
     "cookie popup modal related widget promo subscribe newsletter".split()
 )
-_HEADING_SIZES = {
-    "h1": 24.0,
-    "h2": 20.0,
-    "h3": 18.0,
-    "h4": 16.0,  # >= MIN_HEADING_SIZE(16): h1-h4 are pipeline headings
-    "h5": 14.0,  # bold but below threshold — styled, not a heading
-    "h6": 12.0,
-}
+_HEADING_TAGS = frozenset("h1 h2 h3 h4 h5 h6".split())
+# keywords CPython's _markupbase accepts after "<![" (anything else raises)
+_MARKED_SECTION_KEYWORDS = frozenset(
+    "temp cdata ignore include rcdata if else endif".split()
+)
+_DECL_NAME_RE = re.compile(r"[a-zA-Z][-_.a-zA-Z0-9]*\s*")
 # explicit ASCII whitespace class — the RE2/Java/DuckDB-common subset pinned
 # in tests/test_dialect_parity.py (\v is NOT included: Java \s excludes it,
 # and the DuckDB oracle mirrors this exact class)
@@ -114,9 +110,9 @@ def _normalize_runs(raw_runs: List[tuple]) -> List[tuple]:
 
 
 class _MainContentParser(HTMLParser):
-    """Single-pass block builder.  Malformed HTML never raises: unclosed
+    """Single-pass block builder.  Malformed HTML is tolerated: unclosed
     tags at EOF flush, stray end tags are ignored, void tags don't count
-    toward drop-subtree depth."""
+    toward drop-subtree depth, unknown ``<![`` sections are comments."""
 
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
@@ -233,6 +229,19 @@ class _MainContentParser(HTMLParser):
 
     # -- tag handling ------------------------------------------------------
 
+    def parse_marked_section(self, i, report=1):
+        # CPython raises AssertionError on a "<![" whose keyword it does not
+        # know, losing the rest of the document; the HTML5 tokenizer reads
+        # it as a bogus comment that ends at the next ">".  A keyword that
+        # runs to the end of the buffer may still be incomplete.
+        m = _DECL_NAME_RE.match(self.rawdata, i + 3)
+        end = m.end() if m else i + 3
+        if end == len(self.rawdata) or (
+            m and m.group().strip().lower() in _MARKED_SECTION_KEYWORDS
+        ):
+            return super().parse_marked_section(i, report)
+        return self.parse_bogus_comment(i, report)
+
     def _is_boiler_attrs(self, attrs) -> bool:
         marker = " ".join(
             v for k, v in attrs if k in ("class", "id") and v
@@ -298,7 +307,7 @@ class _MainContentParser(HTMLParser):
             if self._list_depth:
                 self._flush_item()
             return
-        if tag in _HEADING_SIZES:
+        if tag in _HEADING_TAGS:
             self._flush_text()
             self._heading = tag
             return
@@ -414,7 +423,7 @@ class _MainContentParser(HTMLParser):
             if self._list_depth:
                 self._flush_item()
             return
-        if tag in _HEADING_SIZES:
+        if tag in _HEADING_TAGS:
             if self._heading:
                 self._flush_text(kind="heading", level=int(tag[1]))
                 self._heading = None
@@ -484,14 +493,13 @@ def extract_main_blocks(html: str) -> List[Dict[str, Any]]:
     Each block: ``{"kind": "heading"|"text"|"list"|"table", "text": str,
     "level": int, "link_chars": int}`` (+ ``headers``/``rows`` for tables).
     Boilerplate subtrees are dropped during the parse; link-dense short
-    flowing blocks are pruned afterwards.  Never raises on malformed input.
+    flowing blocks are pruned afterwards.  Malformed markup is tolerated;
+    a raise from the parser propagates (a parse turns it into the turn's
+    error row) instead of silently dropping the rest of the document.
     """
     parser = _MainContentParser()
-    try:
-        parser.feed(html)
-        parser.close()
-    except Exception:  # pragma: no cover - HTMLParser is raise-free in
-        pass  # practice; belt-and-braces for exotic inputs
+    parser.feed(html)
+    parser.close()
     kept = []
     for b in parser.blocks:
         if b["kind"] in ("text", "list"):
@@ -519,194 +527,3 @@ _HTML_START_RE = re.compile(r"<(?:!|/?[a-zA-Z])")
 def looks_like_html(stripped: str) -> bool:
     """Cheap dispatch test for a payload that is markup, not prose/JSON."""
     return stripped[:1] == "<" and _HTML_START_RE.match(stripped) is not None
-
-
-def html_to_elements(html: str, output_format: str = "html"):
-    """Extract main content and lay it out onto the deterministic synthetic
-    pages the prose path uses, emitting the same element types the layout
-    decoder produces — so the full node pipeline runs unchanged on HTML
-    turns."""
-    from open_parse_spark.core.model import Bbox, LineElement, TableElement, TextSpan
-    from open_parse_spark.core.payload import (
-        _PROSE_CHAR_WIDTH,
-        _PROSE_LINE_HEIGHT,
-        _PROSE_MARGIN_X,
-        _PROSE_MIN_Y,
-        _PROSE_PARA_GAP,
-        _PROSE_TOP_Y,
-        DEFAULT_PAGE_HEIGHT,
-        DEFAULT_PAGE_WIDTH,
-        ProseTextElement,
-    )
-    from open_parse_spark.functions.tables import (
-        clean_headers,
-        output_to_html,
-        output_to_markdown,
-    )
-
-    def wrap78(text: str) -> List[str]:
-        out: List[str] = []
-        for src in text.split("\n"):
-            if len(src) <= 78:
-                out.append(src)
-            else:
-                out.extend(src[s : s + 78] for s in range(0, len(src), 78))
-        return out
-
-    elements = []
-    page = 0
-    y1 = _PROSE_TOP_Y
-    for b in extract_main_blocks(html):
-        if b["kind"] == "table":
-            headers = clean_headers(list(b["headers"]))
-            rows = b["rows"]
-            if output_format in ("str", "markdown"):
-                text = output_to_markdown(headers, rows)
-            else:
-                text = output_to_html(headers, rows)
-            n_lines = max(1, len(rows) + (1 if headers else 0))
-            needed = n_lines * _PROSE_LINE_HEIGHT
-            if y1 - needed < _PROSE_MIN_Y:
-                page += 1
-                y1 = _PROSE_TOP_Y
-            elements.append(
-                TableElement(
-                    text=text,
-                    bbox=Bbox(
-                        page=page,
-                        page_width=DEFAULT_PAGE_WIDTH,
-                        page_height=DEFAULT_PAGE_HEIGHT,
-                        x0=_PROSE_MARGIN_X,
-                        y0=y1 - needed,
-                        x1=DEFAULT_PAGE_WIDTH - _PROSE_MARGIN_X,
-                        y1=y1,
-                    ),
-                )
-            )
-            y1 = (y1 - needed) - _PROSE_PARA_GAP
-            continue
-        if b["kind"] == "heading":
-            size = _HEADING_SIZES.get(f"h{b['level']}", 16.0)
-            line_h = size + 4.0
-            raw_lines = wrap78(b["text"])
-            needed = len(raw_lines) * line_h
-            if y1 - needed < _PROSE_MIN_Y:
-                page += 1
-                y1 = _PROSE_TOP_Y
-            lines = tuple(
-                LineElement(
-                    bbox=(
-                        _PROSE_MARGIN_X,
-                        (y1 - i * line_h) - (line_h - 2.0),
-                        _PROSE_MARGIN_X
-                        + max(1.0, _PROSE_CHAR_WIDTH * len(t)),
-                        y1 - i * line_h,
-                    ),
-                    spans=(
-                        TextSpan(
-                            text=t, is_bold=True, is_italic=False, size=size
-                        ),
-                    ),
-                )
-                for i, t in enumerate(raw_lines)
-            )
-            from open_parse_spark.core.model import TextElement
-            from open_parse_spark.core.spans import get_lines_bbox
-
-            x0, y0, x1, _ = get_lines_bbox(list(lines))
-            elements.append(
-                TextElement(
-                    text="\n".join(line.text for line in lines),
-                    lines=lines,
-                    bbox=Bbox(
-                        page=page,
-                        page_width=DEFAULT_PAGE_WIDTH,
-                        page_height=DEFAULT_PAGE_HEIGHT,
-                        x0=float(x0),
-                        y0=float(y0),
-                        x1=float(x1),
-                        y1=float(y1),
-                    ),
-                )
-            )
-            y1 = float(y0) - _PROSE_PARA_GAP
-            continue
-        # text / list blocks: same construction as the prose path
-        from open_parse_spark.core.model import clean_markdown_formatting
-
-        if b.get("runs"):
-            # inline bold/italic: one line of style-run TextSpans — the
-            # reference's span-transition markdown formatting applies
-            # (model.py TextSpan.formatted_text); styled paragraphs are
-            # short enough that forgoing the 78-char wrap is the right
-            # trade against splitting a style run across lines
-            needed = _PROSE_LINE_HEIGHT
-            if y1 - needed < _PROSE_MIN_Y:
-                page += 1
-                y1 = _PROSE_TOP_Y
-            total_len = sum(len(t) for t, _, _ in b["runs"])
-            bbox = (
-                _PROSE_MARGIN_X,
-                y1 - (_PROSE_LINE_HEIGHT - 2.0),
-                _PROSE_MARGIN_X + max(1.0, _PROSE_CHAR_WIDTH * total_len),
-                y1,
-            )
-            line = LineElement(
-                bbox=bbox,
-                spans=tuple(
-                    TextSpan(text=t, is_bold=bo, is_italic=it, size=11.0)
-                    for t, bo, it in b["runs"]
-                ),
-            )
-            from open_parse_spark.core.model import TextElement
-
-            elements.append(
-                TextElement(
-                    text=line.text,
-                    lines=(line,),
-                    bbox=Bbox(
-                        page=page,
-                        page_width=DEFAULT_PAGE_WIDTH,
-                        page_height=DEFAULT_PAGE_HEIGHT,
-                        x0=bbox[0],
-                        y0=bbox[1],
-                        x1=bbox[2],
-                        y1=bbox[3],
-                    ),
-                )
-            )
-            y1 = bbox[1] - _PROSE_PARA_GAP
-            continue
-        raw_lines = wrap78(b["text"])
-        if not raw_lines:
-            continue
-        needed = len(raw_lines) * _PROSE_LINE_HEIGHT
-        if y1 - needed < _PROSE_MIN_Y:
-            page += 1
-            y1 = _PROSE_TOP_Y
-        n = len(raw_lines)
-        ly1_last = y1 - (n - 1) * _PROSE_LINE_HEIGHT
-        y0 = ly1_last - (_PROSE_LINE_HEIGHT - 2.0)
-        x1 = max(
-            _PROSE_MARGIN_X + max(1.0, _PROSE_CHAR_WIDTH * len(t))
-            for t in raw_lines
-        )
-        elements.append(
-            ProseTextElement(
-                text="\n".join(
-                    clean_markdown_formatting(t) for t in raw_lines
-                ),
-                bbox=Bbox(
-                    page=page,
-                    page_width=DEFAULT_PAGE_WIDTH,
-                    page_height=DEFAULT_PAGE_HEIGHT,
-                    x0=_PROSE_MARGIN_X,
-                    y0=y0,
-                    x1=x1,
-                    y1=y1,
-                ),
-                prose_spec=(tuple(raw_lines), y1),
-            )
-        )
-        y1 = y0 - _PROSE_PARA_GAP
-    return elements

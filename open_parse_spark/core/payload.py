@@ -1,9 +1,12 @@
-"""Turn payload decoding — the PDF stand-in.
+"""Turn payload decoding — the PDF stand-in — and the synthetic-page layout.
 
 A turn's ``text``/``tool`` columns carry either (a) a JSON document payload
-per the grammar in ``/root/repo/FIXTURES.md`` §2 — the deterministic
-serialized form of what pdfminer/pymupdf would hand the reference — or (b)
-plain prose, which is laid out deterministically onto synthetic pages.
+per the grammar in ``FIXTURES.md`` §2 — the deterministic serialized form of
+what pdfminer/pymupdf would hand the reference — (b) an HTML document, whose
+main-content blocks ``core/html.py`` extracts, or (c) plain prose.  HTML
+blocks and prose paragraphs are laid out here, on one set of synthetic
+pages: a page cursor stacks blocks down from the top margin, and one
+paragraph placer gives every line and element its box.
 
 Decoding mirrors the reference's extraction stages:
 - text elements: line/span assembly as in ``text/pdfminer/core.py:209-242``
@@ -36,6 +39,7 @@ except ImportError:  # pragma: no cover
     _json_loads = json.loads
 from typing import Any, Dict, List, Optional
 
+from open_parse_spark.core.html import extract_main_blocks, looks_like_html
 from open_parse_spark.core.model import (
     MIN_HEADING_SIZE,
     Bbox,
@@ -47,7 +51,11 @@ from open_parse_spark.core.model import (
     TextSpan,
     clean_markdown_formatting,
 )
-from open_parse_spark.core.spans import create_line_element, get_lines_bbox
+from open_parse_spark.core.spans import (
+    create_line_element,
+    get_lines_bbox,
+    lines_from_ocr_output,
+)
 from open_parse_spark.functions.tables import (
     clean_headers,
     output_to_html,
@@ -64,6 +72,9 @@ _PROSE_LINE_HEIGHT = 14.0
 _PROSE_PARA_GAP = 14.0
 _PROSE_CHAR_WIDTH = 6.0
 _PROSE_MIN_Y = 72.0
+# HTML heading level -> bold span size: h1-h4 reach MIN_HEADING_SIZE (16)
+# and are pipeline headings; h5/h6 are bold but below the threshold
+_HEADING_SIZES = {1: 24.0, 2: 20.0, 3: 18.0, 4: 16.0, 5: 14.0, 6: 12.0}
 
 
 def _decode_line(line_obj: Dict[str, Any]) -> LineElement:
@@ -87,18 +98,20 @@ def _decode_line(line_obj: Dict[str, Any]) -> LineElement:
 
 
 class LazyLinesTextElement(TextElement):
-    """Layout-path TextElement whose LineElements are materialized lazily.
+    """TextElement whose LineElements are materialized lazily.
 
     The hot path needs only the element-level aggregates — joined text,
     bbox fold, and the ``all(line.is_heading)`` / ``all(line.is_bold)``
-    style folds — all of which ``_flat_decode_text_lines`` computes straight
-    off the span dicts without constructing ~6 TextSpan+LineElement objects
-    per line for nobody (the only ``.lines`` consumers in the repo are those
-    two folds, plus tests).  A cold reader rebuilds lines from
-    ``line_specs`` — compact ``(bbox4, ((text, bold, italic, size), ...))``
-    tuples, NOT the decoded JSON dicts, so the payload's parse tree stays
+    style folds — which the JSON decoder (``_flat_decode_text_lines``) and
+    the synthetic-page placer (``_paragraph``) compute without constructing
+    ~6 TextSpan+LineElement objects per line for nobody (the only ``.lines``
+    consumers in the repo are those two folds, plus tests).  A cold reader
+    rebuilds lines from ``line_specs``: ``(bbox4, ((text, bold, italic,
+    size), ...))`` per line, consumed once.  The JSON decoder passes a list
+    detached from the decoded dicts, so the payload's parse tree stays
     GC-able after decode (heavy-tailed megabyte payloads would otherwise be
-    pinned in dict form for the element's lifetime; review finding).
+    pinned in dict form for the element's lifetime); the placer passes a
+    generator, so a synthetic paragraph allocates nothing per line.
     Rebuild equality is asserted in tests/test_payload_flat.py."""
 
     __slots__ = ("_line_specs", "_lines_cache", "_flat_heading", "_flat_bold")
@@ -225,10 +238,31 @@ def _flat_decode_text_lines(raw_lines: list):
     )
 
 
+def _render_table(headers, rows, output_format: str = "html") -> str:
+    """Header cleanup + markdown/HTML rendering of one table grid."""
+    headers = clean_headers(headers)
+    if output_format in ("str", "markdown"):
+        return output_to_markdown(headers, rows)
+    return output_to_html(headers, rows)
+
+
 def _decode_page_elements(page_obj: Dict[str, Any]) -> List[Element]:
     page = int(page_obj.get("page", 0))
     width = float(page_obj.get("width", DEFAULT_PAGE_WIDTH))
     height = float(page_obj.get("height", DEFAULT_PAGE_HEIGHT))
+
+    def bbox(coords) -> Bbox:
+        x0, y0, x1, y1 = coords
+        return Bbox(
+            page=page,
+            page_width=width,
+            page_height=height,
+            x0=float(x0),
+            y0=float(y0),
+            x1=float(x1),
+            y1=float(y1),
+        )
+
     out: List[Element] = []
     for el in page_obj.get("elements", []):
         kind = el.get("kind", "text")
@@ -239,22 +273,10 @@ def _decode_page_elements(page_obj: Dict[str, Any]) -> List[Element]:
             flat = _flat_decode_text_lines(raw_lines)
             if flat is not None:
                 text, fold, all_heading, all_bold, line_specs = flat
-                if "bbox" in el:
-                    x0, y0, x1, y1 = el["bbox"]
-                else:
-                    x0, y0, x1, y1 = fold
                 out.append(
                     LazyLinesTextElement(
                         text=text,
-                        bbox=Bbox(
-                            page=page,
-                            page_width=width,
-                            page_height=height,
-                            x0=float(x0),
-                            y0=float(y0),
-                            x1=float(x1),
-                            y1=float(y1),
-                        ),
+                        bbox=bbox(el["bbox"] if "bbox" in el else fold),
                         line_specs=line_specs,
                         is_heading=all_heading,
                         is_bold=all_bold,
@@ -262,165 +284,135 @@ def _decode_page_elements(page_obj: Dict[str, Any]) -> List[Element]:
                 )
                 continue
             lines = [_decode_line(line) for line in raw_lines]
-            if "bbox" in el:
-                x0, y0, x1, y1 = el["bbox"]
-            else:
-                x0, y0, x1, y1 = get_lines_bbox(lines)
-            out.append(
-                TextElement(
-                    text="\n".join([line.text for line in lines]),
-                    lines=tuple(lines),
-                    bbox=Bbox(
-                        page=page,
-                        page_width=width,
-                        page_height=height,
-                        x0=float(x0),
-                        y0=float(y0),
-                        x1=float(x1),
-                        y1=float(y1),
-                    ),
-                )
-            )
         elif kind == "ocr_text":
             # OCR-engine path (T6): raw OCR lines with pymupdf-style font
             # flags, merged by overlap at similar height
             # (reference text/pymupdf/core.py:35-102)
-            from open_parse_spark.core.spans import lines_from_ocr_output
-
             lines = lines_from_ocr_output(
                 el.get("lines", []), error_margin=float(el.get("error_margin", 0))
             )
             if not lines:
                 continue
-            if "bbox" in el:
-                x0, y0, x1, y1 = el["bbox"]
-            else:
-                x0, y0, x1, y1 = get_lines_bbox(lines)
-            out.append(
-                TextElement(
-                    text="\n".join([line.text for line in lines]),
-                    lines=tuple(lines),
-                    bbox=Bbox(
-                        page=page,
-                        page_width=width,
-                        page_height=height,
-                        x0=float(x0),
-                        y0=float(y0),
-                        x1=float(x1),
-                        y1=float(y1),
-                    ),
-                )
-            )
         elif kind == "table":
-            headers = clean_headers(list(el.get("headers", [])))
-            rows = el.get("rows", [])
-            fmt = el.get("output_format", "html")
-            if fmt in ("str", "markdown"):
-                text = output_to_markdown(headers, rows)
-            else:
-                text = output_to_html(headers, rows)
-            x0, y0, x1, y1 = el["bbox"]
-            out.append(
-                TableElement(
-                    text=text,
-                    bbox=Bbox(
-                        page=page,
-                        page_width=width,
-                        page_height=height,
-                        x0=float(x0),
-                        y0=float(y0),
-                        x1=float(x1),
-                        y1=float(y1),
-                    ),
-                )
+            text = _render_table(
+                el.get("headers", []),
+                el.get("rows", []),
+                el.get("output_format", "html"),
             )
+            out.append(TableElement(text=text, bbox=bbox(el["bbox"])))
+            continue
         elif kind == "image":
-            x0, y0, x1, y1 = el["bbox"]
             out.append(
                 ImageElement(
                     text=el.get("text", ""),
                     image=el.get("image", ""),
                     image_mimetype=el.get("image_mimetype", "unknown"),
-                    bbox=Bbox(
-                        page=page,
-                        page_width=width,
-                        page_height=height,
-                        x0=float(x0),
-                        y0=float(y0),
-                        x1=float(x1),
-                        y1=float(y1),
-                    ),
+                    bbox=bbox(el["bbox"]),
                 )
             )
+            continue
+        else:
+            continue
+        # text/ocr_text object path: bbox from the element, else the fold
+        box = bbox(el["bbox"] if "bbox" in el else get_lines_bbox(lines))
+        out.append(
+            TextElement(
+                text="\n".join([line.text for line in lines]),
+                lines=tuple(lines),
+                bbox=box,
+            )
+        )
     return out
 
 
-def _fast_prose_line(bbox, line_text: str) -> LineElement:
-    """Construct a single-regular-span line without redundant work.
+class _PageCursor:
+    """Position on the synthetic pages: blocks stack down from the top
+    margin with a paragraph gap between them, and a block that would cross
+    the bottom margin starts a new page."""
 
-    Semantically identical to ``LineElement(bbox, (TextSpan(line_text, F, F,
-    11.0),))``: prose coordinates are exact multiples of 0.5 (rounding to 2dp
-    is the identity), an unstyled span's formatted_text is its text, and the
-    markdown cleanup is applied iff the text contains ``*``/``_`` (the same
-    fast path ``clean_markdown_formatting`` takes).  Guarded by the frozen
-    golden (tests/test_golden_freeze.py) and the prose property tests."""
-    from open_parse_spark.core.model import clean_markdown_formatting
+    __slots__ = ("page", "y1")
 
-    line = LineElement.__new__(LineElement)
-    line.bbox = bbox
-    line.spans = (
-        TextSpan(text=line_text, is_bold=False, is_italic=False, size=11.0),
+    def __init__(self) -> None:
+        self.page = 0
+        self.y1 = _PROSE_TOP_Y
+
+    def fit(self, needed: float) -> float:
+        """Top edge for a block ``needed`` tall (the page-break rule)."""
+        if self.y1 - needed < _PROSE_MIN_Y:
+            self.page += 1
+            self.y1 = _PROSE_TOP_Y
+        return self.y1
+
+    def emit(self, x0: float, y0: float, x1: float, y1: float) -> Bbox:
+        """The placed block's Bbox; the next block starts one gap below."""
+        self.y1 = y0 - _PROSE_PARA_GAP
+        return Bbox(
+            page=self.page,
+            page_width=DEFAULT_PAGE_WIDTH,
+            page_height=DEFAULT_PAGE_HEIGHT,
+            x0=x0,
+            y0=y0,
+            x1=x1,
+            y1=y1,
+        )
+
+
+def _wrap78(text: str) -> List[str]:
+    """Source lines, each cut into 78-char chunks."""
+    out: List[str] = []
+    for src in text.split("\n"):
+        if len(src) <= 78:
+            out.append(src)
+        else:
+            # index-based chunking: re-slicing the shrinking remainder
+            # is O(n^2) bytes copied and took minutes on 10 MB turns
+            out.extend(src[s : s + 78] for s in range(0, len(src), 78))
+    return out
+
+
+def _right_edge(n_chars: int) -> float:
+    """x1 of a synthetic line ``n_chars`` long (at least 1 pt wide)."""
+    return _PROSE_MARGIN_X + max(1.0, _PROSE_CHAR_WIDTH * n_chars)
+
+
+def _place_lines(cur: _PageCursor, raw_lines: List[str], line_h: float) -> Bbox:
+    """Element box of ``raw_lines`` stacked ``line_h`` apart at the cursor:
+    the min/max fold of the per-line boxes ``_line_specs`` yields (the
+    right edge grows with the line length, so the widest line sets x1)."""
+    n = len(raw_lines)
+    y1 = cur.fit(n * line_h)
+    y0 = (y1 - (n - 1) * line_h) - (line_h - 2.0)
+    return cur.emit(_PROSE_MARGIN_X, y0, _right_edge(max(map(len, raw_lines))), y1)
+
+
+def _line_specs(raw_lines, y1: float, line_h: float, bold: bool, size: float):
+    """Per-line ``(bbox4, spans)`` of a placed paragraph, for the lazy
+    ``LazyLinesTextElement.lines`` rebuild."""
+    for i, t in enumerate(raw_lines):
+        top = y1 - i * line_h
+        yield (
+            (_PROSE_MARGIN_X, top - (line_h - 2.0), _right_edge(len(t)), top),
+            ((t, bold, False, size),),
+        )
+
+
+def _paragraph(
+    cur: _PageCursor,
+    raw_lines: List[str],
+    line_h: float = _PROSE_LINE_HEIGHT,
+    bold: bool = False,
+    size: float = 11.0,
+) -> LazyLinesTextElement:
+    """One text element of single-span lines, all ``bold``/``size``."""
+    bbox = _place_lines(cur, raw_lines, line_h)
+    mark = "**" if bold else ""
+    return LazyLinesTextElement(
+        text="\n".join(clean_markdown_formatting(mark + t + mark) for t in raw_lines),
+        bbox=bbox,
+        line_specs=_line_specs(raw_lines, bbox.y1, line_h, bold, size),
+        is_heading=bold and size >= MIN_HEADING_SIZE,
+        is_bold=bold,
     )
-    line._text = clean_markdown_formatting(line_text)
-    return line
-
-
-class ProseTextElement(TextElement):
-    """TextElement whose LineElements are materialized lazily.
-
-    The prose layout is fully determined by (raw_lines, y1), and the hot
-    path never reads ``.lines`` on prose (``is_heading``/``is_bold`` are
-    identically False: every prose line is one regular 11 pt span, and a
-    paragraph always has >= 1 line, so the reference's ``all(...)`` folds are
-    False) — constructing ~7 LineElement+TextSpan objects per turn for
-    nobody was ~6% of parse CPU.  Any cold-path reader gets lines built by
-    the exact eager construction (``_fast_prose_line``)."""
-
-    __slots__ = ("_prose_spec", "_lines_cache")
-
-    def __init__(self, text: str, bbox: Bbox, prose_spec: tuple):
-        self.text = text
-        self.bbox = bbox
-        self._tokens = None
-        self._prose_spec = prose_spec
-        self._lines_cache = None
-
-    @property
-    def lines(self):
-        if self._lines_cache is None:
-            raw_lines, y1 = self._prose_spec
-            self._lines_cache = tuple(
-                _fast_prose_line(
-                    (
-                        _PROSE_MARGIN_X,
-                        (y1 - i * _PROSE_LINE_HEIGHT) - (_PROSE_LINE_HEIGHT - 2.0),
-                        _PROSE_MARGIN_X
-                        + max(1.0, _PROSE_CHAR_WIDTH * len(line_text)),
-                        y1 - i * _PROSE_LINE_HEIGHT,
-                    ),
-                    line_text,
-                )
-                for i, line_text in enumerate(raw_lines)
-            )
-        return self._lines_cache
-
-    @property
-    def is_heading(self) -> bool:
-        return False
-
-    @property
-    def is_bold(self) -> bool:
-        return False
 
 
 def _prose_to_elements(text: str) -> List[Element]:
@@ -430,58 +422,49 @@ def _prose_to_elements(text: str) -> List[Element]:
     chars; y descends from the top margin, new page when the column is full.
     Purely deterministic so the same prose always yields the same layout.
     """
-    from open_parse_spark.core.model import clean_markdown_formatting
+    cur = _PageCursor()
+    return [
+        _paragraph(cur, _wrap78(para))
+        for para in (p.strip() for p in text.split("\n\n"))
+        if para
+    ]
 
+
+def html_to_elements(html: str) -> List[Element]:
+    """Main content of an HTML page laid out on the prose path's synthetic
+    pages: headings as bold lines sized by level, tables rendered like
+    layout tables, list and text blocks as prose paragraphs — so the full
+    node pipeline runs unchanged on HTML turns."""
+    cur = _PageCursor()
     elements: List[Element] = []
-    page = 0
-    y1 = _PROSE_TOP_Y
-    for para in text.split("\n\n"):
-        para = para.strip()
-        if not para:
-            continue
-        raw_lines: List[str] = []
-        for src_line in para.split("\n"):
-            if len(src_line) <= 78:
-                raw_lines.append(src_line)
-            else:
-                # index-based chunking: re-slicing the shrinking remainder
-                # is O(n^2) bytes copied and took minutes on 10 MB turns
-                raw_lines.extend(
-                    src_line[s : s + 78] for s in range(0, len(src_line), 78)
-                )
-        needed = len(raw_lines) * _PROSE_LINE_HEIGHT
-        if y1 - needed < _PROSE_MIN_Y:
-            page += 1
-            y1 = _PROSE_TOP_Y
-        # bbox fold computed arithmetically with the SAME per-line
-        # expressions the lazy line builder uses (get_lines_bbox equality):
-        # x0 = margin; y1 = first line's top; y0 = last line's bottom;
-        # x1 = max per-line right edge
-        n = len(raw_lines)
-        ly1_last = y1 - (n - 1) * _PROSE_LINE_HEIGHT
-        y0 = ly1_last - (_PROSE_LINE_HEIGHT - 2.0)
-        x1 = max(
-            _PROSE_MARGIN_X + max(1.0, _PROSE_CHAR_WIDTH * len(t))
-            for t in raw_lines
-        )
-        elements.append(
-            ProseTextElement(
-                text="\n".join(
-                    clean_markdown_formatting(t) for t in raw_lines
-                ),
-                bbox=Bbox(
-                    page=page,
-                    page_width=DEFAULT_PAGE_WIDTH,
-                    page_height=DEFAULT_PAGE_HEIGHT,
-                    x0=_PROSE_MARGIN_X,
-                    y0=y0,
-                    x1=x1,
-                    y1=y1,
-                ),
-                prose_spec=(tuple(raw_lines), y1),
+    for b in extract_main_blocks(html):
+        if b["kind"] == "table":
+            headers, rows = b["headers"], b["rows"]
+            needed = max(1, len(rows) + (1 if headers else 0)) * _PROSE_LINE_HEIGHT
+            y1 = cur.fit(needed)
+            bbox = cur.emit(
+                _PROSE_MARGIN_X, y1 - needed, DEFAULT_PAGE_WIDTH - _PROSE_MARGIN_X, y1
             )
-        )
-        y1 = y0 - _PROSE_PARA_GAP
+            elements.append(TableElement(text=_render_table(headers, rows), bbox=bbox))
+        elif b["kind"] == "heading":
+            size = _HEADING_SIZES[b["level"]]
+            elements.append(_paragraph(cur, _wrap78(b["text"]), size + 4.0, True, size))
+        elif b.get("runs"):
+            # inline bold/italic: one line of style-run TextSpans — the
+            # reference's span-transition markdown formatting applies
+            # (model.py TextSpan.formatted_text); styled paragraphs are
+            # short enough that forgoing the 78-char wrap is the right
+            # trade against splitting a style run across lines
+            runs = b["runs"]
+            text = "".join(t for t, _, _ in runs)
+            bbox = _place_lines(cur, [text], _PROSE_LINE_HEIGHT)
+            line = LineElement(
+                bbox=(bbox.x0, bbox.y0, bbox.x1, bbox.y1),
+                spans=tuple(TextSpan(t, bo, it, 11.0) for t, bo, it in runs),
+            )
+            elements.append(TextElement(text=line.text, lines=(line,), bbox=bbox))
+        else:
+            elements.append(_paragraph(cur, _wrap78(b["text"])))
     return elements
 
 
@@ -505,17 +488,11 @@ def decode_payload(text: Optional[str], tool: Optional[str]) -> List[Element]:
                 for page_obj in obj["pages"]:
                     elements.extend(_decode_page_elements(page_obj))
                 continue
-        elif stripped[:1] == "<":
-            # HTML turn: DOM boilerplate strip + main-content extraction,
-            # laid out onto the same synthetic pages (core/html.py)
-            from open_parse_spark.core.html import (
-                html_to_elements,
-                looks_like_html,
-            )
-
-            if looks_like_html(stripped):
-                elements.extend(html_to_elements(payload))
-                continue
+        elif looks_like_html(stripped):
+            # HTML turn: DOM boilerplate strip + main-content extraction
+            # (core/html.py), laid out onto the prose path's synthetic pages
+            elements.extend(html_to_elements(payload))
+            continue
         # plain prose fallback (only sensible for the text column)
         if payload is text:
             elements.extend(_prose_to_elements(payload))

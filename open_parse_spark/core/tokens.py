@@ -26,9 +26,11 @@ import re
 from functools import lru_cache
 from typing import Iterable, List, Optional
 
-try:  # pragma: no cover - exercised only when tiktoken is installed
+try:
     import tiktoken  # type: ignore
-
+except ImportError:
+    _ENCODER = None
+else:  # pragma: no cover - exercised only when tiktoken is installed
     if getattr(tiktoken, "__open_parse_shim__", False):
         # tests/ref_loader.py shims tiktoken so the REFERENCE routes its
         # counts through this module; adopting the shim as our own encoder
@@ -36,9 +38,9 @@ try:  # pragma: no cover - exercised only when tiktoken is installed
         # after a module reload (found as 50 cascading test failures)
         _ENCODER = None
     else:
+        # an installed tiktoken that cannot load cl100k_base (no cached
+        # file, no network) raises here rather than falling back silently
         _ENCODER = tiktoken.get_encoding("cl100k_base")
-except Exception:  # pragma: no cover
-    _ENCODER = None
 
 # middle preference tier: the vendored BPE engine (core/bpe.py) — exact
 # cl100k counts when a vocabulary file is dropped at $OPEN_PARSE_BPE_PATH

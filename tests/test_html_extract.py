@@ -5,11 +5,8 @@ The north-star pipeline ingests HTML turns alongside the JSON layout
 payloads; the reference (Filimoa/open-parse) has no HTML path, so these are
 behavior-defining tests, not ported goldens."""
 
-from open_parse_spark.core.html import (
-    extract_main_blocks,
-    html_to_elements,
-    looks_like_html,
-)
+from open_parse_spark.core.html import extract_main_blocks, looks_like_html
+from open_parse_spark.core.payload import html_to_elements
 from open_parse_spark.core.parse import parse_turn
 
 CHROME_PAGE = (
@@ -362,8 +359,9 @@ def test_tables_render_into_joined_body_text(spark):
 
 
 def test_html_paragraph_layout_matches_prose_layout():
-    """The html layout re-derives the prose constants; this pins the two
-    paths equal so a tweak to one can't silently diverge the other."""
+    """HTML text blocks and prose paragraphs go through one paragraph
+    placer on one synthetic page layout; this pins that an HTML paragraph
+    still lands exactly where the same prose paragraph does."""
     from open_parse_spark.core.payload import _prose_to_elements
 
     text = "one paragraph of words " * 12
@@ -376,6 +374,37 @@ def test_html_paragraph_layout_matches_prose_layout():
         prose_el.bbox.x1,
         prose_el.bbox.y1,
     )
+
+
+def test_unknown_marked_section_reads_as_a_comment():
+    # CPython's parser raises on a "<![" keyword outside its marked-section
+    # list; HTML5 reads it as a bogus comment up to the next ">", and the
+    # rest of the document must survive
+    after = "after the marked section, a long paragraph"
+    html = f"<p>before</p><![zz]><p>{after}</p>"
+    assert [b["text"] for b in extract_main_blocks(html)] == ["before", after]
+    assert [e.text for e in html_to_elements(html)][1].startswith("after the")
+    # no keyword at all reads the same way
+    assert [b["text"] for b in extract_main_blocks("<p>a<![ x]>b</p><![>")] == ["ab"]
+
+
+def test_extractor_raise_becomes_the_turns_error_row(monkeypatch):
+    import pandas as pd
+
+    from open_parse_spark.core import html as H
+    from open_parse_spark.spark.pipeline import _node_rows
+
+    def fault(self, data):
+        raise RuntimeError("parser fault")
+
+    monkeypatch.setattr(H._MainContentParser, "handle_data", fault)
+    turns = pd.DataFrame(
+        {"conv_id": ["c"], "turn_idx": [0], "text": ["<p>some text</p>"], "tool": [None]}
+    )
+    body = _node_rows(["conv_id", "turn_idx", "node_idx", "parse_error"], None)
+    (out,) = body(iter([turns]))
+    assert out["node_idx"].tolist() == [-1]
+    assert out["parse_error"].tolist() == ["RuntimeError: parser fault"]
 
 
 def test_unclosed_list_inside_main_keeps_in_main():
@@ -402,3 +431,87 @@ def test_unclosed_table_inside_main_keeps_in_main():
     assert len(tables) == 1
     assert tables[0]["headers"] == ["h"] and tables[0]["rows"] == [["cell text"]]
     assert all("junk" not in b["text"] for b in blocks)
+
+
+def _html_layout_corpus():
+    """Deterministic HTML documents covering every block the layout places:
+    h1-h6 (some long enough to wrap), paragraphs that wrap and overflow
+    pages, ul/ol lists, tables with and without a header row, <pre>, and
+    inline bold/italic runs."""
+    import random
+
+    rng = random.Random(20261019)
+    words = (
+        "alpha beta gamma delta epsilon zeta theta kappa lambda sigma "
+        "omega lease tenant landlord premises rent term notice clause"
+    ).split()
+
+    def words_of(n):
+        return " ".join(rng.choice(words) for _ in range(n))
+
+    docs = []
+    for d in range(16):
+        parts = []
+        for _ in range(rng.randrange(6, 40)):
+            k = rng.randrange(8)
+            if k == 0:
+                lvl = rng.randrange(1, 7)
+                text = words_of(rng.randrange(1, 25))
+                parts.append(f"<h{lvl}>{text}</h{lvl}>")
+            elif k in (1, 2):
+                parts.append(f"<p>{words_of(rng.randrange(3, 160))}</p>")
+            elif k == 3:
+                tag = rng.choice(["ul", "ol"])
+                items = "".join(
+                    f"<li>{words_of(rng.randrange(1, 30))}</li>"
+                    for _ in range(rng.randrange(1, 8))
+                )
+                parts.append(f"<{tag}>{items}</{tag}>")
+            elif k == 4:
+                ncol = rng.randrange(1, 5)
+                head = ""
+                if rng.random() < 0.5:
+                    head = "".join(f"<th>{words_of(1)}</th>" for _ in range(ncol))
+                    head = f"<tr>{head}</tr>"
+                body = "".join(
+                    "<tr>"
+                    + "".join(f"<td>{words_of(rng.randrange(0, 4))}</td>" for _ in range(ncol))
+                    + "</tr>"
+                    for _ in range(rng.randrange(1, 12))
+                )
+                parts.append(f"<table>{head}{body}</table>")
+            elif k == 5:
+                n = rng.randrange(1, 8)
+                body = "\n".join(words_of(rng.randrange(1, 20)) for _ in range(n))
+                parts.append(f"<pre>\n{body}\n</pre>")
+            else:
+                runs = []
+                for _ in range(rng.randrange(1, 6)):
+                    w = words_of(rng.randrange(1, 6))
+                    styles = [w, f"<b>{w}</b>", f"<em>{w}</em>", f"<strong><i>{w}</i></strong>"]
+                    runs.append(rng.choice(styles))
+                parts.append("<p>" + " ".join(runs) + "</p>")
+        body = "".join(parts)
+        docs.append(
+            f"<html><body><article>{body}</article></body></html>"
+            if d % 2
+            else f"<div>{body}</div>"
+        )
+    return docs
+
+
+def test_html_node_records_pinned():
+    """Every field of the node records of an HTML corpus (text, tokens,
+    bboxes, elements) is pinned by hash, so a layout refactor that moves
+    any heading, list, table, pre or styled-paragraph box fails here."""
+    import hashlib
+    import json
+
+    from open_parse_spark.core.parse import parse_turn_records
+
+    records = [parse_turn_records(doc) for doc in _html_layout_corpus()]
+    assert sum(len(r) for r in records) > 100
+    blob = json.dumps(records, sort_keys=True).encode()
+    assert hashlib.sha256(blob).hexdigest() == (
+        "6b163edbe6109dc512679a98679db1471a70b9ebf281bd4bfbe5587bfd8ffd6f"
+    )

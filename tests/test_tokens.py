@@ -1,6 +1,9 @@
 """Token-counter invariants (core/tokens.py)."""
 
+import os
 import re
+import subprocess
+import sys
 
 from hypothesis import given, settings, strategies as st
 
@@ -31,3 +34,25 @@ def test_num_tokens_long_string_uncached_path():
 
 def num_tokens_reference(s):
     return len(re.findall(_PRETOKEN_RE, s))
+
+
+def test_tiktoken_that_cannot_load_its_encoding_fails_the_import(tmp_path):
+    """An installed tiktoken whose cl100k_base cannot load (no cached file,
+    no network) fails the import instead of silently counting through the
+    approximation."""
+    stub = tmp_path / "tiktoken"
+    stub.mkdir()
+    (stub / "__init__.py").write_text(
+        "def get_encoding(name):\n    raise RuntimeError('no cached ' + name)\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join([str(tmp_path), repo]))
+    proc = subprocess.run(
+        [sys.executable, "-c", "import open_parse_spark.core.tokens"],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert proc.returncode != 0
+    assert "RuntimeError: no cached cl100k_base" in proc.stderr
