@@ -396,6 +396,34 @@ def _line_specs(raw_lines, y1: float, line_h: float, bold: bool, size: float):
         )
 
 
+def _wrap_runs(runs) -> List[list]:
+    """Style runs wrapped at 78 columns, per line its ``(text, bold,
+    italic, 11.0)`` span pieces.  The cuts are ``_wrap78``'s, except that a
+    bold/italic run which would cross one and fits on a line moves whole to
+    the next line, so its markdown markers stay around whole words; a plain
+    run, or a styled one wider than a line, splits at the cut into two
+    spans of one style.  Run text holds no newline (whitespace is
+    collapsed)."""
+    lines: List[list] = []
+    cur: list = []
+    width = 0
+    for t, bold, italic in runs:
+        if (bold or italic) and 0 < width and width + len(t) > 78 >= len(t):
+            lines.append(cur)
+            cur, width = [], 0
+        pos = 0  # index-based, as in _wrap78: no re-sliced remainders
+        while pos < len(t):
+            if width == 78:
+                lines.append(cur)
+                cur, width = [], 0
+            piece = t[pos : pos + 78 - width]
+            cur.append((piece, bold, italic, 11.0))
+            pos += len(piece)
+            width += len(piece)
+    lines.append(cur)
+    return lines
+
+
 def _paragraph(
     cur: _PageCursor,
     raw_lines: List[str],
@@ -450,19 +478,19 @@ def html_to_elements(html: str) -> List[Element]:
             size = _HEADING_SIZES[b["level"]]
             elements.append(_paragraph(cur, _wrap78(b["text"]), size + 4.0, True, size))
         elif b.get("runs"):
-            # inline bold/italic: one line of style-run TextSpans — the
-            # reference's span-transition markdown formatting applies
-            # (model.py TextSpan.formatted_text); styled paragraphs are
-            # short enough that forgoing the 78-char wrap is the right
-            # trade against splitting a style run across lines
-            runs = b["runs"]
-            text = "".join(t for t, _, _ in runs)
-            bbox = _place_lines(cur, [text], _PROSE_LINE_HEIGHT)
-            line = LineElement(
-                bbox=(bbox.x0, bbox.y0, bbox.x1, bbox.y1),
-                spans=tuple(TextSpan(t, bo, it, 11.0) for t, bo, it in runs),
+            # inline bold/italic: the prose placer over the wrapped style
+            # runs; each line's text carries the reference's span-transition
+            # markdown formatting (model.py TextSpan.formatted_text)
+            wrapped = _wrap_runs(b["runs"])
+            raw_lines = ["".join(p[0] for p in pieces) for pieces in wrapped]
+            bbox = _place_lines(cur, raw_lines, _PROSE_LINE_HEIGHT)
+            specs = _line_specs(raw_lines, bbox.y1, _PROSE_LINE_HEIGHT, False, 11.0)
+            lines = tuple(
+                LineElement(bbox=box, spans=tuple(TextSpan(*p) for p in pieces))
+                for (box, _), pieces in zip(specs, wrapped)
             )
-            elements.append(TextElement(text=line.text, lines=(line,), bbox=bbox))
+            text = "\n".join(line.text for line in lines)
+            elements.append(TextElement(text=text, lines=lines, bbox=bbox))
         else:
             elements.append(_paragraph(cur, _wrap78(b["text"])))
     return elements

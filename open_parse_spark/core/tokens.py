@@ -99,8 +99,9 @@ _subn = _PRETOKEN_RE.subn
 _CACHE_MAX_LEN = 2_048
 
 
-@lru_cache(maxsize=8192)
-def _num_tokens_cached(string: str) -> int:
+def _count(string: str) -> int:
+    """The counter dispatch: tiktoken, else the vendored BPE, else the
+    regex approximation."""
     if _ENCODER is not None:  # pragma: no cover
         # encode_ordinary: plain encode() RAISES on text containing special
         # tokens like '<|endoftext|>' (common in scraped ML content), and
@@ -112,6 +113,9 @@ def _num_tokens_cached(string: str) -> int:
     return _subn("", string)[1]
 
 
+_num_tokens_cached = lru_cache(maxsize=8192)(_count)
+
+
 def num_tokens(string: Optional[str]) -> int:
     """Deterministic token count; mirrors reference ``utils.num_tokens``
     (``/root/reference/src/openparse/utils.py:6-10``) with a pure-regex
@@ -121,12 +125,7 @@ def num_tokens(string: Optional[str]) -> int:
     if not string:
         return 0
     if len(string) > _CACHE_MAX_LEN:
-        if _ENCODER is not None:  # pragma: no cover
-            return len(_ENCODER.encode_ordinary(string))
-        bpe = _get_bpe()
-        if bpe is not None:
-            return bpe.count(string)
-        return _subn("", string)[1]
+        return _count(string)
     return _num_tokens_cached(string)
 
 

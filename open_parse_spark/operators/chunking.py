@@ -319,7 +319,7 @@ def rag_index_table(
         aggs.append(F.sum(contrib).alias(f"dot{p}"))
     dots = words_ex.groupBy("doc_id", "chunk_idx", "n_words").agg(*aggs)
     bucket = F.lit(0).cast("long")
-    for p in range(n_planes):  # MSB first, like lsh_bucket
+    for p in range(n_planes):  # MSB first, like lsh_buckets_arrow
         bucket = bucket * 2 + F.when(F.col(f"dot{p}") >= 0, 1).otherwise(0)
     return dots.select(
         "doc_id", "chunk_idx", "n_words", bucket.alias("bucket")

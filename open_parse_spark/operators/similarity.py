@@ -7,11 +7,23 @@
   order bit-for-bit).
 - LSH-bucketed ANN (random hyperplanes): the 100 TB path — bucket the corpus
   once by sign-pattern, probe only matching buckets.  Hyperplanes are
-  deterministic pseudo-random values derived from xxhash64(plane, dim), so
+  deterministic pseudo-random values derived from sha256(plane, dim), so
   no RNG state ships to executors and two runs agree exactly.
+- IVF: a coarse quantizer (k centroids), each query probes only its nearest
+  buckets.  The float ``ivf_topk`` is the scale default; ``ivf_topk_quantized``
+  is its value-checked fixed-point twin.
+- The fixed-point quantizer (bottom section) is the one owner of integer
+  k-means for both IVF and product quantization (``operators/pq.py``): an
+  IVF coarse quantizer is a product quantizer with one subspace (Jegou et
+  al., TPAMI 2011).  One Lloyd loop (``_lloyd``) and one exact
+  nearest-code kernel (``_nearest``) serve both families.
+- Every cosine family ends in one top-k tail (``_top_k``).
 """
 
 from __future__ import annotations
+
+import math
+from typing import Dict, List, Tuple
 
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
@@ -65,6 +77,13 @@ def brute_force_topk(
             cosine(F.col("qv"), F.col("cv")).alias("sim"),
         )
     )
+    return _top_k(scored, k)
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The cosine top-k tail of every family: (query_id, neighbor_id, sim)
+    -> the ``k`` most similar neighbors per query, ties to the lower
+    neighbor_id, as (query_id, neighbor_id, rank: long, sim4)."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("neighbor_id")
     )
@@ -104,29 +123,13 @@ def plane_values(plane: int, dim: int) -> list:
     return out
 
 
-def lsh_bucket(
-    vec: Column, num_planes: int, dim: int, plane_offset: int = 0
-) -> Column:
-    """Sign-pattern bucket id over ``num_planes`` deterministic hyperplanes
-    (``plane_offset`` selects an independent plane set per LSH table).
-    First plane in the set is the most-significant bit.
-
-    Pure-JVM expression variant — useful as a write-time column (one table's
-    bucket per partition-by column); the query path (``lsh_topk``) computes
-    all tables' buckets in one Arrow batch instead, which is ~20x faster
-    (HOF dots are interpreted per element, never whole-stage-codegen'd)."""
-    bucket = F.lit(0).cast("long")
-    for p in range(plane_offset, plane_offset + num_planes):
-        planes = F.lit(plane_values(p, dim))
-        bit = F.when(dot(vec, planes) >= 0, F.lit(1)).otherwise(F.lit(0))
-        bucket = bucket * 2 + bit
-    return bucket
-
-
 def lsh_buckets_arrow(num_planes: int, num_tables: int, dim: int):
     """Vectorized pandas UDF computing all ``num_tables`` bucket ids for a
-    vector column in one Arrow batch: (n, dim) @ (dim, tables*planes) matmul,
-    sign bits folded MSB-first exactly like ``lsh_bucket``.
+    vector column in one Arrow batch: (n, dim) @ (dim, tables*planes) matmul.
+    Table t's sign pattern over planes t*num_planes .. (t+1)*num_planes-1 is
+    its bucket id, the first plane of the table the most-significant bit
+    (one Arrow batch instead of a per-element interpreted HOF dot per plane,
+    ~20x faster).
 
     The dot products use the same driver-side literal planes as the DuckDB
     oracle; a sign disagreement with the oracle's sequential fold would need
@@ -305,67 +308,189 @@ def _int_dot(a: Column, b: Column) -> Column:
     )
 
 
-def _assign_to_centroids_int(c: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Integer twin of ``_assign_to_centroids``: argmin centroid by EXACT
-    int64 squared distance, ties to the lowest centroid_id (numpy argmin
-    keeps the first minimum; rows are sorted by centroid_id).  Same map-only
-    Arrow-matmul shape; at scale=1e6 and dim<=10^3 every intermediate stays
-    far below 2^63."""
+# books: per 1-indexed subspace, (ascending code ids, (n_codes, sub) int64
+# centroid matrix) — codes ascend so numpy argmin's first-minimum rule
+# reproduces "ties to the lowest code id" exactly
+_Books = Dict[int, Tuple["object", "object"]]
+
+
+def _quantized(df: DataFrame, id_col: str, vec_col: str, scale: int) -> DataFrame:
+    return df.select(
+        F.col(id_col).alias("id"), quantize_vec(F.col(vec_col), scale).alias("vq")
+    )
+
+
+def _float64_exact(big: int, terms: int) -> bool:
+    """The exact-arithmetic magnitude bounds.  A sum of ``terms`` products
+    of integers within ``big`` is exact in float64 when it stays <= 2^53
+    (every integer partial sum is representable, whatever the summation
+    order — so dgemm/BLAS is exact), and in int64 when it stays < 2^63.
+    True: float64 is exact; False: only int64 is; past both: ValueError
+    (an int64 wrap would silently return the farthest code)."""
+    if terms * big * big <= 2**53:
+        return True
+    if terms * big * big < 2**63:
+        return False
+    raise ValueError(
+        f"quantized magnitude {big} exceeds the exact-int64 bound "
+        f"{math.isqrt((2**63 - 1) // terms)} for {terms} product terms; "
+        "lower the quantization scale"
+    )
+
+
+def _nearest(m, mat):
+    """The exact nearest-code kernel: for each int64 row of ``m`` (n, sub),
+    the position in ``mat`` (k, sub) of the code at the least squared L2,
+    ties to the lowest position.
+
+    argmin of |c|^2 - 2 v.c (|v|^2 is constant per row).  That value ranges
+    within +-3*sub*big^2 (anti-aligned vectors hit the worst case), so with
+    that headroom it is one float64 matmul — numpy's int64 matmul has no
+    BLAS kernel (measured 2x on the whole IVF query) — and past it the same
+    formula in exact int64; the argmin always matches the exact-integer
+    oracle."""
+    import numpy as np
+
+    big = int(max(np.abs(m).max(initial=0), np.abs(mat).max(initial=0)))
+    if _float64_exact(big, 3 * mat.shape[1]):
+        fm = mat.astype(np.float64)
+        d = (fm * fm).sum(axis=1) - 2.0 * (m.astype(np.float64) @ fm.T)
+    else:
+        d = (mat * mat).sum(axis=1) - 2 * (m @ mat.T)
+    return d.argmin(axis=1)
+
+
+def _codes_udf(books: _Books, sub: int):
+    """Map-only assignment: Arrow UDF vq -> array of the nearest code id per
+    subspace.  The codebook is tiny and bounded, so it rides in as a numpy
+    literal and every corpus vector is touched once, with no shuffle."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.types import LongType
+    from pyspark.sql.types import ArrayType, LongType
 
-    rows = centroids if isinstance(centroids, list) else centroids.collect()
-    rows = sorted(rows, key=lambda r: r["centroid_id"])
-    if not rows:
-        return c.select(
-            "id", "vq", F.lit(None).cast("long").alias("centroid_id")
-        ).where(F.lit(False))
-    ids = np.array([r["centroid_id"] for r in rows], dtype=np.int64)
-    # float64 on purpose: numpy int64 matmul has no BLAS kernel (naive
-    # triple loop, measured 2x on the whole query).  dgemm is EXACT when
-    # every product <= 2^53/dim: then the dim-length sum is <= 2^53 and
-    # every integer partial sum is exactly representable regardless of
-    # summation order.  That holds when both operands stay within
-    # |q| <= floor(sqrt(2^53/dim)) — e.g. ~93e6 quantized units (|x|~93 at
-    # scale=1e6) for dim=1024; normalized embeddings are orders of magnitude
-    # inside it.  (The earlier "|x| <= 67" note was wrong: products near
-    # 2^52 summed over dim >= 3 DO exceed 2^53 — ADVICE r3.)  Rows beyond
-    # the bound take the exact int64 path instead of a silently-rounding
-    # dgemm, so the argmin always matches the exact-integer oracle.
-    mat = np.array([r["cq"] for r in rows], dtype=np.float64)  # (k, dim)
-    sq = (mat * mat).sum(axis=1)  # |c|^2 exact under the same bound, (k,)
-    mat_i = np.array([r["cq"] for r in rows], dtype=np.int64)
-    sq_i = (mat_i * mat_i).sum(axis=1)
-    dim = mat.shape[1] if mat.ndim == 2 and mat.shape[1] else 1
-    # d = |c|^2 - 2<v,c> ranges within +-3*dim*maxprod (anti-aligned vectors
-    # hit the worst case), so BOTH paths need the factor-3 headroom, not
-    # just the per-sum bound: the f64 subtraction must stay <= 2^53 to be
-    # exactly representable, and the i64 subtraction must stay < 2^63 or it
-    # wraps and silently returns the farthest centroid (review finding —
-    # the earlier bounds of 2^53/dim and 2^62/dim admitted exactly-at-bound
-    # anti-aligned inputs that overflow).
-    f64_bound = int(np.floor(np.sqrt(2.0**53 / (3 * dim))))
-    mat_ok = np.abs(mat_i).max(initial=0) <= f64_bound
-    i64_bound = int(np.floor(np.sqrt(2.0**63 / (3 * dim))))
+    def _assign(vs):
+        m = np.stack(vs.values).astype(np.int64)  # (n, dim)
+        out = [
+            codes[_nearest(m[:, (s - 1) * sub : s * sub], mat)]
+            for s, (codes, mat) in sorted(books.items())
+        ]
+        return pd.Series(list(np.stack(out, axis=1)))
 
-    def _argmin(vs):
-        m_i = np.stack(vs.values)  # int64 (n, dim)
-        if mat_ok and np.abs(m_i).max(initial=0) <= f64_bound:
-            m = m_i.astype(np.float64)
-            d = sq[None, :] - 2.0 * (m @ mat.T)  # |v|^2 omitted: const/row
-            return pd.Series(ids[d.argmin(axis=1)])
-        big = max(np.abs(m_i).max(initial=0), np.abs(mat_i).max(initial=0))
-        if big > i64_bound:
-            raise ValueError(
-                f"quantized magnitude {big} exceeds the exact-int64 bound "
-                f"{i64_bound} for dim={dim}; lower the quantization scale"
+    return F.pandas_udf(_assign, ArrayType(LongType()))
+
+
+def _books_from_rows(rows, n_sub: int) -> _Books:
+    """(s, code, cq) tuples -> books."""
+    import numpy as np
+
+    books: _Books = {}
+    for s in range(1, n_sub + 1):
+        srows = sorted((code, cq) for ss, code, cq in rows if ss == s)
+        if srows:
+            books[s] = (
+                np.array([c for c, _ in srows], dtype=np.int64),
+                np.array([cq for _, cq in srows], dtype=np.int64),
             )
-        d = sq_i[None, :] - 2 * (m_i @ mat_i.T)  # exact int64
-        return pd.Series(ids[d.argmin(axis=1)])
+    return books
 
-    assign = F.pandas_udf(_argmin, LongType())
-    return c.select("id", "vq", assign(F.col("vq")).alias("centroid_id"))
+
+def _codebook_df(spark, rows) -> DataFrame:
+    import pandas as pd
+
+    # arrow-path local relation: a plain-list createDataFrame round-trips
+    # through pickled RDD slices and spawns python workers (r6 profile)
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "s": [t[0] for t in rows],
+                "code": [t[1] for t in rows],
+                "cq": [t[2] for t in rows],
+            }
+        ),
+        "s int, code long, cq array<bigint>",
+    )
+
+
+def _lloyd(
+    embeddings: DataFrame,
+    n_sub: int,
+    n_codes: int,
+    iters: int,
+    id_col: str,
+    vec_col: str,
+    scale: int,
+    dim: int = None,
+) -> Tuple[_Books, List[Tuple[int, int, List[int]]]]:
+    """Fixed-point Lloyd over every subspace at once; returns (books, final
+    rows as (s, code, cq) tuples).  IVF runs it with ``n_sub=1``.
+
+    Quantize once, then every iteration is integer sums + one declared
+    rounding, floor(sum/count + 0.5): sum and count are exact integers
+    < 2^53, so sum/count is one correctly-rounded double division —
+    bit-identical on any partitioning and in DuckDB, which replays the whole
+    quantizer.  Init: the ``n_codes`` vectors with the smallest md5(id) hash
+    seed EVERY subspace (identical ids across subspaces, slices differ).
+    Per iteration: one map-only assignment, one map-side-combined shuffle on
+    (s, code) keys, and one bounded driver read (<= n_sub * n_codes rows)
+    that feeds the next assignment and cuts the iterative lineage without a
+    checkpoint.  Empty clusters drop out."""
+    if dim is None:
+        dim = _dim_of(embeddings, vec_col)  # probe job; pass dim to skip
+    if dim % n_sub:
+        # a remainder would be sliced off every subspace: trailing
+        # components never reach a codebook or a distance
+        raise ValueError(f"dim {dim} not divisible by n_sub {n_sub}")
+    sub = dim // n_sub
+    c = _quantized(embeddings, id_col, vec_col, scale)
+    seed = (
+        c.withColumn("h", _md5_long(F.col("id")))
+        .orderBy("h")
+        .limit(n_codes)
+        .select("h", "vq")
+        .collect()
+    )
+    seed.sort(key=lambda r: int(r["h"]))
+    rows = [
+        (s, i + 1, list(r["vq"][(s - 1) * sub : s * sub]))
+        for s in range(1, n_sub + 1)
+        for i, r in enumerate(seed)
+    ]
+    books = _books_from_rows(rows, n_sub)
+    for _ in range(iters if books else 0):
+        ex = c.select(
+            F.posexplode(_codes_udf(books, sub)(F.col("vq"))).alias("s0", "code"),
+            "vq",
+        ).select(
+            (F.col("s0") + 1).alias("s"),
+            "code",
+            F.slice("vq", F.col("s0") * sub + 1, sub).alias("svq"),
+        )
+        upd = ex.groupBy("s", "code").agg(
+            F.array(
+                *[
+                    F.floor(
+                        F.sum(F.element_at("svq", i + 1)).cast("double")
+                        / F.count(F.lit(1))
+                        + F.lit(0.5)
+                    )
+                    .cast("long")
+                    .alias(f"d{i}")
+                    for i in range(sub)
+                ]
+            ).alias("cq")
+        )
+        rows = [
+            (int(r["s"]), int(r["code"]), [int(x) for x in r["cq"]])
+            for r in upd.collect()
+        ]
+        books = _books_from_rows(rows, n_sub)
+    return books, rows
+
+
+def _centroid_df(spark, rows) -> DataFrame:
+    return _codebook_df(spark, rows).select(
+        F.col("code").cast("int").alias("centroid_id"), "cq"
+    )
 
 
 def kmeans_centroids_quantized(
@@ -377,63 +502,11 @@ def kmeans_centroids_quantized(
     scale: int = QUANT_SCALE,
     dim: int = None,
 ) -> DataFrame:
-    """Fixed-point Lloyd: quantize once, then every iteration is integer
-    sums + one declared rounding (floor(sum/count + 0.5)) — bit-identical on
-    any partitioning/engine, which is what lets DuckDB replay the whole
-    quantizer (VERDICT r2 item 5).  Init = k smallest md5-hash ids.  Same
-    shuffle shape as the float path: one broadcast + one groupBy per
-    iteration.  Returns (centroid_id, cq: array<bigint>)."""
-    c = embeddings.select(
-        F.col(id_col).alias("id"), quantize_vec(F.col(vec_col), scale).alias("vq")
-    )
-    init = (
-        c.withColumn("h", _md5_long(F.col("id")))
-        .orderBy("h")
-        .limit(k)
-        .select(
-            F.row_number().over(Window.orderBy("h")).alias("centroid_id"),
-            F.col("vq").alias("cq"),
-        )
-    )
-    if dim is None:
-        dim = _dim_of(embeddings, vec_col)  # probe job; pass dim to skip
-    if dim == 0:
-        return init
-    spark = embeddings.sparkSession
-    # rows through the loop, one single-slice local relation at the end
-    # (see kmeans_centroids): bounded k-row driver reads, no checkpoint jobs
-    rows = init.collect()
-    for _ in range(iters):
-        assigned = _assign_to_centroids_int(c, rows)
-        agg = assigned.groupBy("centroid_id").agg(
-            F.array(
-                *[
-                    # declared fixed-point rounding: sum and count are exact
-                    # integers < 2^53, so sum/count is one correctly-rounded
-                    # double division — identical in DuckDB
-                    F.floor(
-                        F.sum(F.element_at("vq", i + 1)).cast("double")
-                        / F.count(F.lit(1))
-                        + F.lit(0.5)
-                    )
-                    .cast("long")
-                    .alias(f"d{i}")
-                    for i in range(dim)
-                ]
-            ).alias("cq")
-        )
-        rows = agg.collect()
-    import pandas as pd
-
-    return spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "centroid_id": [int(r["centroid_id"]) for r in rows],
-                "cq": [[int(x) for x in r["cq"]] for r in rows],
-            }
-        ),
-        "centroid_id int, cq array<bigint>",
-    )
+    """The IVF coarse quantizer: ``_lloyd`` with one subspace of ``k``
+    codes.  Returns (centroid_id, cq: array<bigint>); ``dim`` skips the
+    probe job when the caller already knows it."""
+    _books, rows = _lloyd(embeddings, 1, k, iters, id_col, vec_col, scale, dim)
+    return _centroid_df(embeddings.sparkSession, rows)
 
 
 def ivf_topk_quantized(
@@ -451,19 +524,21 @@ def ivf_topk_quantized(
     """IVF top-k over the fixed-point quantizer: identical plan shape to
     ``ivf_topk`` (broadcast centroids, bucket-pruned probes, one corpus
     pass), but every distance/score is derived from exact integers so the
-    result is engine-reproducible.  Scoring: integer dot products -> one
-    double division -> round(4).  The float ``ivf_topk`` stays the scale
-    default (no quantization error); this variant is the value-checked twin.
+    result is engine-reproducible.  The corpus is assigned by the exact
+    nearest-code kernel.  Scoring: integer dot products -> one double
+    division -> round(4).  The float ``ivf_topk`` stays the scale default
+    (no quantization error); this variant is the value-checked twin.
     """
-    centroids = kmeans_centroids_quantized(
-        embeddings, k=n_centroids, iters=iters, id_col=id_col,
-        vec_col=vec_col, scale=scale, dim=dim,
+    if dim is None:
+        dim = _dim_of(embeddings, vec_col)
+    books, rows = _lloyd(
+        embeddings, 1, n_centroids, iters, id_col, vec_col, scale, dim
     )
-    c = embeddings.select(
-        F.col(id_col).alias("id"), quantize_vec(F.col(vec_col), scale).alias("vq")
-    )
-    corpus_assigned = _assign_to_centroids_int(c, centroids).select(
-        F.col("id").alias("neighbor_id"), F.col("vq").alias("cvq"), "centroid_id"
+    centroids = _centroid_df(embeddings.sparkSession, rows)
+    corpus_assigned = _quantized(embeddings, id_col, vec_col, scale).select(
+        F.col("id").alias("neighbor_id"),
+        F.col("vq").alias("cvq"),
+        _codes_udf(books, dim)(F.col("vq"))[0].alias("centroid_id"),
     )
     q = queries.select(
         F.col(id_col).alias("query_id"),
@@ -492,19 +567,7 @@ def ivf_topk_quantized(
         .where(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", sim.alias("sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.round("sim", 4).alias("sim4"),
-        )
-    )
+    return _top_k(scored, k)
 
 
 def ivf_topk(
@@ -557,17 +620,7 @@ def ivf_topk(
             "query_id", "neighbor_id", cosine(F.col("qv"), F.col("cv")).alias("sim")
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.round("sim", 4).alias("sim4"),
-        )
-    )
+    return _top_k(scored, k)
 
 
 def cosine_neardup_pairs(
@@ -721,16 +774,4 @@ def lsh_topk(
             "query_id", "neighbor_id", cosine(F.col("qv"), F.col("cv")).alias("sim")
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.round("sim", 4).alias("sim4"),
-        )
-    )
+    return _top_k(scored, k)

@@ -173,7 +173,7 @@ def _lsh_bucket_sql(col: str, table: int, num_planes: int = 4, dim: int = 64) ->
     terms = []
     for i in range(num_planes):
         vals = ", ".join(repr(v) for v in S.plane_values(table * num_planes + i, dim))
-        weight = 1 << (num_planes - 1 - i)  # first plane = MSB, as in lsh_bucket
+        weight = 1 << (num_planes - 1 - i)  # first plane = MSB, as in lsh_buckets_arrow
         terms.append(
             f"(CASE WHEN list_dot_product({col}, [{vals}]) >= 0"
             f" THEN {weight} ELSE 0 END)"
@@ -283,8 +283,11 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate top-k over the FIXED-POINT coarse quantizer
     (``ivf_topk_quantized``): integer Lloyd steps with one declared rounding
     make the whole quantizer+probe+score path engine-reproducible, so the
-    oracle below replays it end to end (VERDICT r2 item 5).  The float
-    ``ivf_topk`` remains the scale-default API, exercised by pytest only
+    oracle below replays it end to end (VERDICT r2 item 5).  The coarse
+    quantizer is the fixed-point Lloyd loop PQ trains with (one subspace,
+    16 codes), and the corpus is assigned by the same exact nearest-code
+    kernel.  The float ``ivf_topk`` remains the scale-default API and the
+    vector leg of ``hybrid_rrf(leg="ivf")``, exercised by pytest only
     (``ann_recall`` runs ``ivf_topk_quantized`` too); the two share every
     plan shape."""
     emb = _tbl(spark, sf_dir, "embeddings")

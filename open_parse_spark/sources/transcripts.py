@@ -29,15 +29,24 @@ TRANSCRIPT_COLUMNS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
 
 def iceberg_available(spark: SparkSession) -> bool:
+    """Whether the Iceberg runtime jar is on the driver's classpath.  Only
+    the JVM's ``ClassNotFoundException`` reads as "absent"; any other error
+    (a dead JVM, a broken gateway) raises instead of quietly sending a
+    table name to ``spark.table``."""
+    from py4j.protocol import Py4JJavaError
+
     try:
         # Class.forName throws if the Iceberg runtime jar is absent
         # (plain attribute access on _jvm returns lazy JavaPackage objects)
         spark._jvm.java.lang.Class.forName(  # type: ignore[attr-defined]
             "org.apache.iceberg.catalog.Catalog"
         )
-        return True
-    except Exception:
-        return False
+    except Py4JJavaError as exc:
+        name = exc.java_exception.getClass().getName()
+        if name == "java.lang.ClassNotFoundException":
+            return False
+        raise
+    return True
 
 
 def load_transcripts(spark: SparkSession, source: str) -> DataFrame:

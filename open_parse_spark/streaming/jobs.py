@@ -24,6 +24,26 @@ TRANSCRIPT_DDL = (
     "conv_id string, turn_idx int, role string, text string, tool string, "
     "ts timestamp"
 )
+EVENT_DDL = (
+    "event_id long, ts timestamp, user_id long, event_type string, "
+    "value double, props string"
+)
+DOCUMENT_DDL = "doc_id long, text string, lang string, source string, n_chars long"
+
+
+def _read_stream(
+    spark: SparkSession,
+    ddl: str,
+    input_dir: str,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """The file-source stream of every job: parquet files under ``ddl``,
+    at most ``max_files_per_trigger`` files per micro-batch when set (the
+    late-data tests run per-file micro-batches)."""
+    reader = spark.readStream.schema(ddl)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(input_dir)
 
 
 def streaming_parse(
@@ -32,12 +52,9 @@ def streaming_parse(
     max_files_per_trigger: int = 4,
 ) -> DataFrame:
     """readStream(parquet transcripts) -> content nodes (unbounded)."""
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_DDL)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
+    return parse_transcripts(
+        _read_stream(spark, TRANSCRIPT_DDL, input_dir, max_files_per_trigger)
     )
-    return parse_transcripts(stream)
 
 
 def streaming_events_hourly(
@@ -48,13 +65,7 @@ def streaming_events_hourly(
     """Watermarked tumbling 1h window per event_type; late rows beyond the
     watermark are dropped, state is bounded (the 100 TB requirement for any
     unbounded aggregation)."""
-    ev = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .parquet(input_dir)
-    )
+    ev = _read_stream(spark, EVENT_DDL, input_dir)
     return (
         ev.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -92,13 +103,9 @@ def streaming_sessionize(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    reader = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    if max_files_per_trigger:  # per-file micro-batches (late-data tests)
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    ev = reader.parquet(input_dir).withWatermark("ts", watermark)
+    ev = _read_stream(
+        spark, EVENT_DDL, input_dir, max_files_per_trigger
+    ).withWatermark("ts", watermark)
 
     out_schema = (
         "user_id long, session_no long, n_events long, session_start string"
@@ -237,11 +244,8 @@ def streaming_dedup_exact(
     At 100 TB this assumes duplicates arrive within the watermark of each
     other (true for crawl/ingest bursts); cross-window dups are left to the
     batch dedup pass — the standard lambda split."""
-    reader = spark.readStream.schema(TRANSCRIPT_DDL)
-    if max_files_per_trigger:  # per-file micro-batches (late-data tests)
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = (
-        reader.parquet(input_dir)
+        _read_stream(spark, TRANSCRIPT_DDL, input_dir, max_files_per_trigger)
         # NULL text would md5 to NULL, and dropDuplicatesWithinWatermark
         # treats NULL keys as equal — distinct no-text turns would silently
         # drop (review finding); key them uniquely instead
@@ -323,10 +327,8 @@ def streaming_decontaminate(
                 }
             )
 
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_DDL)
-        .parquet(input_dir)
-        .select("conv_id", "turn_idx", "text")
+    stream = _read_stream(spark, TRANSCRIPT_DDL, input_dir).select(
+        "conv_id", "turn_idx", "text"
     )
     return stream.mapInPandas(
         check,
@@ -347,9 +349,6 @@ def run_stream_to_memory(
     )
 
 
-DOCUMENT_DDL = "doc_id long, text string, lang string, source string, n_chars long"
-
-
 def streaming_chunk(
     spark: SparkSession,
     input_dir: str,
@@ -363,10 +362,8 @@ def streaming_chunk(
     parse twin relies on.  Append-mode legal, no watermark needed."""
     from open_parse_spark.operators.chunking import chunk_documents
 
-    reader = spark.readStream.schema(DOCUMENT_DDL)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return chunk_documents(reader.parquet(input_dir), window=window, overlap=overlap)
+    docs = _read_stream(spark, DOCUMENT_DDL, input_dir, max_files_per_trigger)
+    return chunk_documents(docs, window=window, overlap=overlap)
 
 
 def streaming_extract_urls(
@@ -378,10 +375,8 @@ def streaming_extract_urls(
     per-document (doc_id, url, domain) rows, stateless append.  The
     per-domain AGGREGATION stays batch (or becomes a watermarked windowed
     agg downstream) — an unbounded global groupBy is not streaming-legal."""
-    reader = spark.readStream.schema(DOCUMENT_DDL)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return _url_rows(reader.parquet(input_dir), "doc_id")
+    docs = _read_stream(spark, DOCUMENT_DDL, input_dir, max_files_per_trigger)
+    return _url_rows(docs, "doc_id")
 
 
 def _url_rows(df: DataFrame, *key_cols: str) -> DataFrame:
@@ -407,10 +402,9 @@ def streaming_url_domains_hourly(
     groupBy is not; windowing + watermark bounds the state, late rows
     beyond the watermark are dropped).  Append mode: a window's counts
     emit once, when the watermark passes its end."""
-    reader = spark.readStream.schema(TRANSCRIPT_DDL)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    turns = reader.parquet(input_dir).withWatermark("ts", watermark)
+    turns = _read_stream(
+        spark, TRANSCRIPT_DDL, input_dir, max_files_per_trigger
+    ).withWatermark("ts", watermark)
     urls = _url_rows(turns, "ts").select("ts", "domain")
     return (
         urls.groupBy(F.window("ts", "1 hour").alias("w"), "domain")
@@ -447,10 +441,7 @@ def streaming_rag_index(
     Returns the started ``availableNow`` StreamingQuery."""
     from open_parse_spark.operators.chunking import rag_index_table
 
-    reader = spark.readStream.schema(DOCUMENT_DDL)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.parquet(input_dir)
+    docs = _read_stream(spark, DOCUMENT_DDL, input_dir, max_files_per_trigger)
 
     def write_batch(batch_df, epoch_id):
         (
@@ -547,10 +538,8 @@ def streaming_bloom_decontaminate(
                 }
             )
 
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_DDL)
-        .parquet(input_dir)
-        .select("conv_id", "turn_idx", "text")
+    stream = _read_stream(spark, TRANSCRIPT_DDL, input_dir).select(
+        "conv_id", "turn_idx", "text"
     )
     return stream.mapInPandas(
         check,
@@ -582,10 +571,7 @@ def streaming_bm25_postings(
     Returns the started ``availableNow`` StreamingQuery."""
     from open_parse_spark.operators.search import doc_postings
 
-    reader = spark.readStream.schema(DOCUMENT_DDL)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.parquet(input_dir)
+    docs = _read_stream(spark, DOCUMENT_DDL, input_dir, max_files_per_trigger)
 
     def write_batch(batch_df, epoch_id):
         tf, dl = doc_postings(batch_df)

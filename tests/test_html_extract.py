@@ -376,6 +376,60 @@ def test_html_paragraph_layout_matches_prose_layout():
     )
 
 
+def test_styled_paragraph_wraps_like_prose():
+    """A paragraph with inline bold/italic wraps at 78 chars like prose and
+    stays inside the page's right margin.  A styled run that would cross a
+    wrap point moves whole to the next line when it fits one (its markdown
+    markers stay around whole words); a wider one splits into two spans of
+    the same style."""
+    from open_parse_spark.core.payload import _prose_to_elements
+
+    el = html_to_elements("<p>" + "word " * 100 + "<b>x</b></p>")[0]
+    plain = _prose_to_elements("word " * 100 + "x")[0]
+    assert el.bbox.x1 <= 540 and el.bbox.x1 == plain.bbox.x1
+    assert (el.bbox.y0, el.bbox.y1) == (plain.bbox.y0, plain.bbox.y1)
+    assert [ln.bbox for ln in el.lines] == [ln.bbox for ln in plain.lines]
+    assert len(el.lines) == 7
+    for ln in el.lines[:-1]:
+        assert [(s.text, s.is_bold, s.is_italic) for s in ln.spans] == [
+            (ln.text, False, False)
+        ]
+        assert len(ln.text) == 78
+    assert [(s.text, s.is_bold) for s in el.lines[-1].spans] == [
+        ("d word word word word word word ", False),
+        ("x", True),
+    ]
+    assert el.text == "\n".join(ln.text for ln in el.lines)
+    assert el.text.endswith("word**x**")
+
+    def styles(el):
+        return [[(s.text, s.is_bold, s.is_italic) for s in ln.spans] for ln in el.lines]
+
+    # a 20-char bold run at column 70 moves whole to line 2
+    el = html_to_elements("<p>" + "a" * 70 + "<b>" + "b" * 20 + "</b> tail <i>it</i></p>")[0]
+    assert styles(el) == [
+        [("a" * 70, False, False)],
+        [("b" * 20, True, False), (" tail ", False, False), ("it", False, True)],
+    ]
+    assert el.bbox.x1 == 72 + 6 * 70
+    assert el.text.split("\n") == [ln.text for ln in el.lines]
+    # a bold run wider than a line splits at the cut, one style both sides
+    el = html_to_elements("<p>" + "a" * 10 + "<b>" + "b" * 100 + "</b> tail</p>")[0]
+    assert styles(el) == [
+        [("a" * 10, False, False), ("b" * 68, True, False)],
+        [("b" * 32, True, False), (" tail", False, False)],
+    ]
+    assert el.bbox.x1 == 540
+
+    # 78 chars or fewer: still one line holding every run
+    el = html_to_elements("<p>short <b>bold</b> and <i>it</i></p>")[0]
+    assert len(el.lines) == 1 and el.text == el.lines[0].text
+    assert [(s.text, s.is_bold, s.is_italic) for s in el.lines[0].spans] == [
+        ("short ", False, False), ("bold", True, False), (" and ", False, False),
+        ("it", False, True),
+    ]
+
+
 def test_unknown_marked_section_reads_as_a_comment():
     # CPython's parser raises on a "<![" keyword outside its marked-section
     # list; HTML5 reads it as a bogus comment up to the next ">", and the
@@ -513,5 +567,5 @@ def test_html_node_records_pinned():
     assert sum(len(r) for r in records) > 100
     blob = json.dumps(records, sort_keys=True).encode()
     assert hashlib.sha256(blob).hexdigest() == (
-        "6b163edbe6109dc512679a98679db1471a70b9ebf281bd4bfbe5587bfd8ffd6f"
+        "252438bcf63d11b4f3963791e6bd38743308d83d24e4e84b6e4a064ff5aa6e3a"
     )

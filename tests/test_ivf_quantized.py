@@ -131,7 +131,14 @@ def test_assign_large_magnitude_exact_int_fallback(spark):
     0).  The assigner must detect the magnitude and take the exact int64
     path (ADVICE r3: the old '|x| <= 67 implies partial sums < 2^53' claim
     was wrong for dim >= 3)."""
-    from open_parse_spark.operators.similarity import _assign_to_centroids_int
+    from open_parse_spark.operators.similarity import _books_from_rows, _codes_udf
+
+    def _assign(c, cents):
+        """(id, vq) x (centroid_id, cq) through the shared nearest-code
+        kernel, as the one-subspace Arrow assignment IVF runs."""
+        rows = [(1, r["centroid_id"], r["cq"]) for r in cents.collect()]
+        udf = _codes_udf(_books_from_rows(rows, 1), len(rows[0][2]))
+        return c.select("id", udf(F.col("vq"))[0].alias("centroid_id"))
 
     v, c1, c2 = 149999980, 149999979, 149999980
     # sanity: the float plan really does flip on this triple
@@ -144,7 +151,7 @@ def test_assign_large_magnitude_exact_int_fallback(spark):
     cents = spark.createDataFrame(
         [(1, [c1]), (2, [c2])], "centroid_id long, cq array<long>"
     )
-    got = _assign_to_centroids_int(c, cents).first()
+    got = _assign(c, cents).first()
     assert got["centroid_id"] == 2, got
 
     # in-bound vectors still take the fast path and agree with brute force
@@ -162,7 +169,7 @@ def test_assign_large_magnitude_exact_int_fallback(spark):
          for j, row in enumerate(np.random.RandomState(4).randint(-40_000_000, 40_000_000, (3, 4)), start=1)],
         "centroid_id long, cq array<long>",
     )
-    got_rows = {r["id"]: r["centroid_id"] for r in _assign_to_centroids_int(c_small, cents4).collect()}
+    got_rows = {r["id"]: r["centroid_id"] for r in _assign(c_small, cents4).collect()}
     cent_py = sorted(
         [(r["centroid_id"], r["cq"]) for r in cents4.collect()]
     )
@@ -170,3 +177,75 @@ def test_assign_large_magnitude_exact_int_fallback(spark):
         dists = [(sum((a - b) ** 2 for a, b in zip(r["vq"], cq)), cid) for cid, cq in cent_py]
         want = min(dists)[1]
         assert got_rows[r["id"]] == want
+
+
+def test_ivf_centroids_are_a_one_subspace_pq_codebook(emb):
+    """IVF's coarse quantizer is a product quantizer with one subspace: both
+    run the same fixed-point Lloyd loop, so the rows agree exactly."""
+    from open_parse_spark.operators.pq import pq_codebooks_quantized
+
+    ivf = kmeans_centroids_quantized(emb, k=4, iters=2).collect()
+    pq = pq_codebooks_quantized(emb, n_sub=1, n_codes=4, iters=2).collect()
+    assert {r["s"] for r in pq} == {1}
+    assert sorted((r["centroid_id"], tuple(r["cq"])) for r in ivf) == sorted(
+        (r["code"], tuple(r["cq"])) for r in pq
+    )
+    assert len(ivf) == 4
+
+
+def test_full_probe_ivf_equals_brute_force(emb):
+    """Probing every centroid makes the fixed-point IVF exhaustive: its
+    ranking must equal the exact brute-force one."""
+    from open_parse_spark.operators.similarity import brute_force_topk
+
+    q = emb.where(F.col("vec_id") < 10)
+
+    def ranking(df):
+        return {(r["query_id"], r["rank"]): r["neighbor_id"] for r in df.collect()}
+
+    exact = ranking(brute_force_topk(emb, q, k=5))
+    ivf = ranking(ivf_topk_quantized(emb, q, k=5, n_centroids=16, n_probe=16))
+    assert len(exact) == 50
+    assert ivf == exact
+
+
+def test_pq_subspace_past_dgemm_bound_assigns_exactly(spark):
+    """PQ shares IVF's nearest-code kernel: with n_sub=2, the second subspace
+    holds magnitudes past the dgemm bound floor(sqrt(2^53 / (3*2))) while
+    the first stays inside it.  The float formulation would assign the
+    vector equal to code 2 to code 1 (the same rounding flip as the IVF
+    triple above); the kernel must take exact int64 for that subspace, so
+    one Lloyd step leaves code 1 at a-1 instead of averaging it to a."""
+    import hashlib
+
+    from open_parse_spark.operators.pq import pq_codebooks_quantized
+    from open_parse_spark.operators.similarity import _nearest
+
+    a = 149999980
+    assert 3 * 2 * a * a > 2**53  # subspace 2 is past the dgemm bound
+    fm = np.array([[a - 1, 0], [a, 0]], dtype=np.float64)
+    d = (fm * fm).sum(axis=1) - 2.0 * (np.array([[a, 0]], dtype=np.float64) @ fm.T)
+    assert int(d.argmin(axis=1)[0]) == 0, "search premise broke"
+    mat = np.array([[a - 1, 0], [a, 0]], dtype=np.int64)
+    assert list(_nearest(np.array([[a, 0]], dtype=np.int64), mat)) == [1]
+
+    # the two smallest md5(id) hashes seed codes 1 and 2
+    ida, idb, idv = sorted(
+        range(3), key=lambda i: int(hashlib.md5(str(i).encode()).hexdigest()[:15], 16)
+    )
+    x = a / QUANT_SCALE
+    df = spark.createDataFrame(
+        [
+            (ida, [0.1, 0.2, (a - 1) / QUANT_SCALE, 0.0]),
+            (idb, [0.3, -0.1, x, 0.0]),
+            (idv, [0.12, 0.19, x, 0.0]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    (vq,) = df.where(F.col("vec_id") == ida).select(quantize_vec(F.col("embedding"))).first()
+    assert vq[2:] == [a - 1, 0]
+    book = pq_codebooks_quantized(df, n_sub=2, n_codes=2, iters=1).collect()
+    assert {r["code"]: list(r["cq"]) for r in book if r["s"] == 2} == {
+        1: [a - 1, 0],
+        2: [a, 0],
+    }
